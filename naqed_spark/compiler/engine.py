@@ -303,25 +303,31 @@ class Engine:
         binding happens at the SPEC level the bound literal reaches the
         parquet scan as an ordinary pushed filter — a parameterized
         query costs exactly what its literal twin costs."""
+        # epoch/date projections assume a UTC session; a caller that
+        # reaches the engine directly (not through a registered key's
+        # build, which pins it too) may have changed the zone since
+        self.spark.conf.set("spark.sql.session.timeZone", "UTC")
         spec = bind_args(spec, params if params is not None else {})
         # r17: the referenced-name over-approximation for the $asof
         # payload prune (every sub-compile — $scalar inners, $from,
         # set branches — works on sub-dicts of this spec, so one
-        # collection at the top covers them all)
-        self._spec_refnames = (
+        # collection at the top covers them all). It is passed down
+        # the compile calls, never stored on the engine: a query
+        # compiled while another is mid-compile keeps its own set.
+        refs = frozenset(
             _collect_spec_strings(spec, set()) | _CATALOG_KEY_COLS
         )
-        spec = self._resolve_scalars(spec)
+        spec = self._resolve_scalars(spec, refs)
         qs = parse_query(spec)
         if isinstance(qs, SetSpec):
-            return self._compile_set(qs)
+            return self._compile_set(qs, refs)
         if isinstance(qs, StreamSpec):
             return self._compile_stream(qs)
         if isinstance(qs, StreamStreamJoinSpec):
             return self._compile_stream_join(qs)
-        return self._compile(qs)
+        return self._compile(qs, refs)
 
-    def _resolve_scalars(self, obj: object) -> object:
+    def _resolve_scalars(self, obj: object, refs: frozenset) -> object:
         """$scalar (round 14, M23 engine-half): ``{"$scalar": <spec>}``
         anywhere a literal is legal — filter/where/having operands,
         $limit, $if branches — runs the inner query and substitutes its
@@ -355,15 +361,16 @@ class Engine:
                     # uncorrelated $scalar inside it still resolves
                     # when the engine compiles the inner spec.
                     return obj
-                inner = self._resolve_scalars(inner)
+                inner = self._resolve_scalars(inner, refs)
                 iqs = parse_query(inner)
                 if isinstance(iqs, (StreamSpec, StreamStreamJoinSpec)):
                     raise SpecError(
                         "$scalar cannot wrap a $stream/$stream_join"
                         " query"
                     )
-                idf = (self._compile_set(iqs)
-                       if isinstance(iqs, SetSpec) else self._compile(iqs))
+                idf = (self._compile_set(iqs, refs)
+                       if isinstance(iqs, SetSpec)
+                       else self._compile(iqs, refs))
                 if len(idf.columns) != 1:
                     raise SpecError(
                         f"$scalar subquery must produce exactly one"
@@ -387,9 +394,9 @@ class Engine:
                 elif isinstance(v, (_dt.date, _dt.datetime)):
                     v = v.isoformat()
                 return v
-            return {k: self._resolve_scalars(x) for k, x in obj.items()}
+            return {k: self._resolve_scalars(x, refs) for k, x in obj.items()}
         if isinstance(obj, list):
-            return [self._resolve_scalars(x) for x in obj]
+            return [self._resolve_scalars(x, refs) for x in obj]
         return obj
 
     def _compile_stream(self, ss: StreamSpec) -> DataFrame:
@@ -644,7 +651,7 @@ class Engine:
         )
         return _run_to_memory(out, self.spark, "append")
 
-    def _compile_set(self, ss: SetSpec) -> DataFrame:
+    def _compile_set(self, ss: SetSpec, refs: frozenset) -> DataFrame:
         """Set-operation combine (round 7). Scale shape: the union itself is
         a zero-shuffle concat of the branch plans; the DISTINCT variants
         ($union/$intersect/$except) shuffle once on the full row — Spark
@@ -652,7 +659,8 @@ class Engine:
         exchange. Branches are aligned BY NAME before the positional
         combine so field order in the spec never changes semantics."""
         frames = [
-            self._compile_set(b) if isinstance(b, SetSpec) else self._compile(b)
+            self._compile_set(b, refs) if isinstance(b, SetSpec)
+            else self._compile(b, refs)
             for b in ss.branches
         ]
         first_cols = frames[0].columns
@@ -699,7 +707,7 @@ class Engine:
         return df
 
     def _apply_correlated_scalar(
-        self, df: DataFrame, pred: Predicate, entity: str
+        self, df: DataFrame, pred: Predicate, entity: str, refs: frozenset
     ) -> DataFrame:
         """M25 (round 15): lower a correlated scalar comparison to the
         classic decorrelation. Scale shape: the inner spec is a grouped
@@ -735,9 +743,9 @@ class Engine:
                     f"$scalar.$on: no such outer column {oc!r} on"
                     f" {entity!r} (have {sorted(df.columns)})"
                 )
-        inner = self._resolve_scalars(cs.inner)
+        inner = self._resolve_scalars(cs.inner, refs)
         iqs = parse_query(inner)
-        idf = self._compile(iqs)
+        idf = self._compile(iqs, refs)
         keys = list(cs.on)
         missing = [ic for ic in keys if ic not in idf.columns]
         if missing:
@@ -779,7 +787,9 @@ class Engine:
             .drop("__t_cs_v", *[f"__t_cs_{ic}" for ic in keys])
         )
 
-    def _apply_node_filters(self, df: DataFrame, node: Node) -> DataFrame:
+    def _apply_node_filters(
+        self, df: DataFrame, node: Node, refs: frozenset
+    ) -> DataFrame:
         """One spelling of the $filter split, shared by the scan path
         and the post-$traverse path: plain predicates first (they push
         to the scan / prune the traversed frame), then the correlated-
@@ -792,18 +802,22 @@ class Engine:
             df = _apply_predicate(df, pred)
         for pred in node.filters:
             if isinstance(pred.value, CorrelatedScalar):
-                df = self._apply_correlated_scalar(df, pred, node.entity)
+                df = self._apply_correlated_scalar(
+                    df, pred, node.entity, refs
+                )
         for pred in node.filters:
             # M39: membership joins run LAST — the plain predicates
             # above already pruned the probe side, so the semi/anti
             # join scans the smallest frame
             if isinstance(pred.value, SubqueryIn):
-                df = self._apply_in_query(df, pred, node.entity)
+                df = self._apply_in_query(df, pred, node.entity, refs)
             elif isinstance(pred.value, ExistsQuery):
-                df = self._apply_exists_query(df, pred, node.entity)
+                df = self._apply_exists_query(df, pred, node.entity, refs)
         return df
 
-    def _compile_join_frames(self, js: "JoinFramesSpec") -> DataFrame:
+    def _compile_join_frames(
+        self, js: "JoinFramesSpec", refs: frozenset
+    ) -> DataFrame:
         """M41: ad-hoc equi-join of two compiled query frames.
 
         Result columns = left columns + right NON-KEY columns; for
@@ -817,10 +831,10 @@ class Engine:
 
         def side(s):
             if isinstance(s, JoinFramesSpec):
-                return self._compile_join_frames(s)
+                return self._compile_join_frames(s, refs)
             if isinstance(s, SetSpec):
-                return self._compile_set(s)
-            return self._compile(s)
+                return self._compile_set(s, refs)
+            return self._compile(s, refs)
 
         left, right = side(js.left), side(js.right)
         for lc in js.on:
@@ -882,7 +896,7 @@ class Engine:
         return joined.drop(*tmp.values())
 
     def _apply_exists_query(
-        self, df: DataFrame, pred: Predicate, entity: str
+        self, df: DataFrame, pred: Predicate, entity: str, refs: frozenset
     ) -> DataFrame:
         """M43: multi-key correlated EXISTS — LEFT SEMI (or ANTI for
         $not_exists_query) on EVERY $on equi pair. Scale shape: one
@@ -901,9 +915,9 @@ class Engine:
                     f" {disp} (have {sorted(df.columns)})"
                 )
         inner = (
-            self._compile_set(eq.inner)
+            self._compile_set(eq.inner, refs)
             if isinstance(eq.inner, SetSpec)
-            else self._compile(eq.inner)
+            else self._compile(eq.inner, refs)
         )
         for ic in eq.on:
             if ic not in inner.columns:
@@ -940,7 +954,7 @@ class Engine:
         return df.join(keys, cond, how)
 
     def _apply_in_query(
-        self, df: DataFrame, pred: Predicate, entity: str
+        self, df: DataFrame, pred: Predicate, entity: str, refs: frozenset
     ) -> DataFrame:
         """M39: {col: {"$in_query"/"$not_in_query": spec}} — LEFT SEMI
         / LEFT ANTI join against the subquery's single output column.
@@ -961,9 +975,9 @@ class Engine:
                 f" (have {sorted(df.columns)})"
             )
         inner = (
-            self._compile_set(sq.inner)
+            self._compile_set(sq.inner, refs)
             if isinstance(sq.inner, SetSpec)
-            else self._compile(sq.inner)
+            else self._compile(sq.inner, refs)
         )
         op_name = "$not_in_query" if sq.negate else "$in_query"
         if len(inner.columns) != 1:
@@ -997,10 +1011,10 @@ class Engine:
 
     # -- compilation -------------------------------------------------------
     def _load_filtered(
-        self, node: Node, sample: "SampleSpec | None" = None
+        self, node: Node, refs: frozenset, sample: "SampleSpec | None" = None
     ) -> DataFrame:
         df = self.catalog.entity(node.entity)
-        df = self._apply_node_filters(df, node)
+        df = self._apply_node_filters(df, node, refs)
         if sample is not None:
             # $sample (round 7): deterministic md5-bucket sample of the
             # ROOT entity, applied at the scan — after ALL of $filter
@@ -1070,7 +1084,8 @@ class Engine:
         return df
 
     def _compile_node(
-        self, node: Node, sample: "SampleSpec | None" = None,
+        self, node: Node, refs: frozenset,
+        sample: "SampleSpec | None" = None,
         base: "DataFrame | None" = None,
     ) -> tuple[DataFrame, list[str]]:
         """Compile a traversal subtree to (DataFrame, requested columns).
@@ -1084,14 +1099,14 @@ class Engine:
         if base is not None:
             # post-$traverse: the shared $filter split applies to the
             # traversed frame (a correlated $scalar joins against it)
-            df = self._apply_node_filters(base, node)
+            df = self._apply_node_filters(base, node, refs)
         else:
-            df = self._load_filtered(node, sample)
+            df = self._load_filtered(node, refs, sample)
         cols = list(node.fields)
         for rel_name, child in node.children:
             rel = self.catalog.relationship(node.entity, rel_name)
             child.entity = rel.dst
-            child_df, child_cols = self._compile_node(child)
+            child_df, child_cols = self._compile_node(child, refs)
             if child.collect:
                 # $collect re-nest (naqed's array-of-children shape): one
                 # parent row, children as a sorted array — a pre-join
@@ -1333,14 +1348,8 @@ class Engine:
                     # sf0.1; pruned struct 1.7× faster — the fan-out
                     # rows no longer copy the unreferenced heavy
                     # payload columns into aggregation buffers).
-                    refs = getattr(self, "_spec_refnames", None)
-
                     def _keep(c):
-                        return (
-                            refs is None
-                            or c in refs
-                            or c.startswith("__")
-                        )
+                        return c in refs or c.startswith("__")
 
                     names = [
                         c for c in df.columns if c != a.per and _keep(c)
@@ -1917,7 +1926,9 @@ class Engine:
                 col = col.cast("double")
         return col
 
-    def _traverse_frame(self, entity: str, tr: TraverseSpec) -> DataFrame:
+    def _traverse_frame(
+        self, entity: str, tr: TraverseSpec, refs: frozenset
+    ) -> DataFrame:
         """$traverse (round 14, M19): BFS reachability to max-depth or
         fixpoint, compiling to the verified DataFrame-Pregel shape the
         §2-I graph keys carry (graph_reachability_bfs): per superstep
@@ -1929,7 +1940,10 @@ class Engine:
         O(1) retained pinned state via trim_pins. Returns the root
         entity's rows restricted to the reached set, plus the min-hop
         depth column ``tr.alias`` (0 on seeds)."""
-        from naqed_spark.queries._util import low_shuffle
+        from naqed_spark.queries._util import (
+            checkpoint_observed,
+            log_supersteps,
+        )
         from naqed_spark.session import persistent_rdd_ids, trim_pins
 
         pk = PRIMARY_KEYS.get(entity)
@@ -1991,7 +2005,7 @@ class Engine:
                 F.col(prefix + pk).alias("dst"),
             ).distinct()
         else:
-            sub = self._compile(tr.edges)
+            sub = self._compile(tr.edges, refs)
             need = [tr.src, tr.dst] + ([tr.weight] if tr.weight else [])
             for c in need:
                 if c not in sub.columns:
@@ -2017,7 +2031,7 @@ class Engine:
             edges.count()  # materialize before base so trim can't sweep it
             base = persistent_rdd_ids(self.spark)
             cap = tr.max_depth if tr.max_depth is not None else 100
-            converged = tr.max_depth is not None
+            fixpoint = False  # stopped on an empty frontier, not the cap
             if tr.weight is not None:
                 # M22 (round 14, engine-half): cheapest-path mode — frontier
                 # Bellman-Ford, the verified graph_shortest_path_weighted
@@ -2036,63 +2050,66 @@ class Engine:
                                              "bigint") else "double")
                 best = seeds.select("v", F.lit(0).cast(cost_t).alias("__t_d"))
                 frontier = best
-                with low_shuffle(self.spark):
-                    for _ in range(1, cap + 1):
-                        cand = (
-                            frontier.join(edges, frontier.v == edges.src)
-                            .select(
-                                F.col("dst").alias("v"),
-                                (F.col("__t_d")
-                                 + F.col("w").cast(cost_t)).alias("__t_d"),
-                            )
-                            .groupBy("v")
-                            .agg(F.min("__t_d").alias("__t_d"))
+                for step in range(1, cap + 1):
+                    cand = (
+                        frontier.join(edges, frontier.v == edges.src)
+                        .select(
+                            F.col("dst").alias("v"),
+                            (F.col("__t_d")
+                             + F.col("w").cast(cost_t)).alias("__t_d"),
                         )
-                        old = best.select("v", F.col("__t_d").alias("__t_old"))
-                        improved = (
-                            cand.join(old, "v", "left")
-                            .where(F.col("__t_old").isNull()
-                                   | (F.col("__t_d") < F.col("__t_old")))
-                            .select("v", "__t_d")
-                            .localCheckpoint()  # cut lineage per round
-                        )
-                        if improved.isEmpty():
-                            converged = True
-                            break
-                        best = (
-                            best.unionAll(improved)
-                            .groupBy("v")
-                            .agg(F.min("__t_d").alias("__t_d"))
-                            .localCheckpoint()
-                        )
-                        frontier = improved
-                        trim_pins(self.spark, base, keep=2)
+                        .groupBy("v")
+                        .agg(F.min("__t_d").alias("__t_d"))
+                    )
+                    old = best.select("v", F.col("__t_d").alias("__t_old"))
+                    improved, m = checkpoint_observed(  # cut lineage per round
+                        cand.join(old, "v", "left")
+                        .where(F.col("__t_old").isNull()
+                               | (F.col("__t_d") < F.col("__t_old")))
+                        .select("v", "__t_d"),
+                        F.count(F.lit(1)).alias("n"),
+                    )
+                    # nothing improved: the next round relaxes from an
+                    # empty frontier, so best is final
+                    if m["n"] == 0:
+                        fixpoint = True
+                        break
+                    best = (
+                        best.unionAll(improved)
+                        .groupBy("v")
+                        .agg(F.min("__t_d").alias("__t_d"))
+                        .localCheckpoint()
+                    )
+                    frontier = improved
+                    trim_pins(self.spark, base, keep=2)
                 visited = best
             else:
                 visited = seeds.select("v", F.lit(0).alias("__t_d"))
                 frontier = visited
-                with low_shuffle(self.spark):
-                    for depth in range(1, cap + 1):
-                        nxt = (
-                            frontier.join(edges, frontier.v == edges.src)
-                            .select(F.col("dst").alias("v"))
-                            .distinct()
-                            .join(visited.select("v"), "v", "left_anti")
-                            .select("v", F.lit(depth).alias("__t_d"))
-                            .localCheckpoint()  # cut lineage per superstep
-                        )
-                        if nxt.isEmpty():
-                            converged = True
-                            break
-                        visited = visited.unionAll(nxt).localCheckpoint()
-                        frontier = nxt
-                        trim_pins(self.spark, base, keep=2)
+                for step in range(1, cap + 1):
+                    nxt, m = checkpoint_observed(  # cut lineage per superstep
+                        frontier.join(edges, frontier.v == edges.src)
+                        .select(F.col("dst").alias("v"))
+                        .distinct()
+                        .join(visited.select("v"), "v", "left_anti")
+                        .select("v", F.lit(step).alias("__t_d")),
+                        F.count(F.lit(1)).alias("n"),
+                    )
+                    # an empty frontier is a fixpoint: the next round
+                    # joins nothing
+                    if m["n"] == 0:
+                        fixpoint = True
+                        break
+                    visited = visited.unionAll(nxt).localCheckpoint()
+                    frontier = nxt
+                    trim_pins(self.spark, base, keep=2)
+            log_supersteps("$traverse", step, cap, fixpoint)
         finally:
             # unpersist even when a Spark error escapes the
             # superstep loop — a leaked pinned edge set would
             # otherwise live for the session lifetime
             edges.unpersist()
-        if not converged:
+        if not fixpoint and tr.max_depth is None:
             raise SpecError(
                 f"$traverse did not reach fixpoint within {cap}"
                 f" supersteps — the graph's diameter exceeds the safety"
@@ -2107,7 +2124,7 @@ class Engine:
             .withColumnRenamed("__t_d", tr.alias)
         )
 
-    def _compile(self, qs: QuerySpec) -> DataFrame:
+    def _compile(self, qs: QuerySpec, refs: frozenset) -> DataFrame:
         base_frame = None
         if qs.from_inner is not None:
             # M35 (round 16b): the root frame is the compiled INNER
@@ -2120,11 +2137,11 @@ class Engine:
             # 100 TB-safe.
             inner = qs.from_inner
             if isinstance(inner, JoinFramesSpec):
-                base_frame = self._compile_join_frames(inner)
+                base_frame = self._compile_join_frames(inner, refs)
             elif isinstance(inner, SetSpec):
-                base_frame = self._compile_set(inner)
+                base_frame = self._compile_set(inner, refs)
             else:
-                base_frame = self._compile(inner)
+                base_frame = self._compile(inner, refs)
             missing = [
                 f for f in qs.root.fields if f not in base_frame.columns
             ]
@@ -2134,8 +2151,12 @@ class Engine:
                     f" result (have {sorted(base_frame.columns)})"
                 )
         if qs.traverse is not None:
-            base_frame = self._traverse_frame(qs.root.entity, qs.traverse)
-        df, cols = self._compile_node(qs.root, qs.sample, base=base_frame)
+            base_frame = self._traverse_frame(
+                qs.root.entity, qs.traverse, refs
+            )
+        df, cols = self._compile_node(
+            qs.root, refs, qs.sample, base=base_frame
+        )
         # $select computed columns land before aggregation, so $groupby/
         # $agg/$orderby can reference them like any field; without an agg
         # they join the projection after the requested fields.

@@ -17,9 +17,9 @@ Cross-engine hash-match conventions used by every checked query:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import logging
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from naqed_spark.catalog import load  # re-export for query modules
 
@@ -32,7 +32,8 @@ __all__ = [
     "dsum",
     "r4",
     "r6",
-    "low_shuffle",
+    "checkpoint_observed",
+    "log_supersteps",
     "scoped_persist",
     "release_scoped_persists",
     "session_fragment",
@@ -202,16 +203,29 @@ def r6(c: Column) -> Column:
     return F.round(c, 6)
 
 
-@contextmanager
-def low_shuffle(spark, n: int = 8):
-    """Temporarily drop shuffle parallelism for driver-side iterative loops
-    (Pregel supersteps, streaming replays) whose per-step data is tiny —
-    task-launch overhead dominates there. Only effective for actions that
-    EXECUTE inside the block (localCheckpoint/count); the query's final
-    lazy DataFrame still runs at the session setting."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+def checkpoint_observed(
+    df: DataFrame, *metrics: Column
+) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint()`` that also returns ``metrics`` (aggregate
+    Columns, e.g. ``F.count(F.lit(1)).alias("n")``) over the checkpointed
+    rows — the per-superstep convergence signal of a fixpoint loop at no
+    extra job. The observe node is the plan's root, above every exchange,
+    so the metrics are computed in the checkpoint's own result stage,
+    whose accumulator updates are applied exactly once; a probe such as
+    ``isEmpty()`` or ``count()`` after the checkpoint would be a second
+    job per superstep."""
+    obs = Observation()
+    cp = df.observe(obs, *metrics).localCheckpoint()
+    return cp, obs.get
+
+
+_LOG = logging.getLogger("naqed_spark")
+
+
+def log_supersteps(loop: str, steps: int, cap: int, converged: bool) -> None:
+    """One DEBUG record per fixpoint loop (off by default): how many
+    supersteps ran against the cap, and why the loop stopped."""
+    _LOG.debug(
+        "fixpoint loop=%s supersteps=%d cap=%d stop=%s",
+        loop, steps, cap, "converged" if converged else "cap",
+    )

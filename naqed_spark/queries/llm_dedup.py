@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from naqed_spark.queries._util import load, low_shuffle, scoped_persist, spread
+from naqed_spark.queries._util import load, scoped_persist, spread
 from naqed_spark.queries.llm import _SHINGLES_SQL, _SIG_COLS_SQL, llm_neardup_lsh
 from naqed_spark.registry import query
 
@@ -143,38 +143,37 @@ def llm_dedup_groups(spark, sf_dir):
         .distinct()
         .select("v", F.col("v").alias("label"))
     )
-    with low_shuffle(spark):
-        converged = False
-        for _ in range(20):
-            msgs = labels.join(sym, labels.v == sym.src).select(
-                F.col("dst").alias("v"), F.col("label")
-            )
-            new_labels = (
-                labels.unionAll(msgs)
-                .groupBy("v")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint()
-            )
-            if new_labels.join(
-                labels,
-                (new_labels.v == labels.v) & (new_labels.label != labels.label),
-            ).isEmpty():
-                labels = new_labels
-                converged = True
-                break
+    converged = False
+    for _ in range(20):
+        msgs = labels.join(sym, labels.v == sym.src).select(
+            F.col("dst").alias("v"), F.col("label")
+        )
+        new_labels = (
+            labels.unionAll(msgs)
+            .groupBy("v")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint()
+        )
+        if new_labels.join(
+            labels,
+            (new_labels.v == labels.v) & (new_labels.label != labels.label),
+        ).isEmpty():
             labels = new_labels
-            # prior checkpoint consumed by the convergence join; only the
-            # newest (labels) stays live (VERDICT r6 item 7)
-            trim_pins(spark, base, keep=1)
-        if not converged:
-            # a component with diameter > 20 would otherwise return silently
-            # wrong (non-minimal) labels while the oracle computes the true
-            # transitive closure — fail loudly instead.
-            raise RuntimeError(
-                "llm_dedup_groups: min-label propagation did not converge "
-                "in 20 rounds (near-dup component diameter > 20); raise the "
-                "round cap for this corpus"
-            )
+            converged = True
+            break
+        labels = new_labels
+        # prior checkpoint consumed by the convergence join; only the
+        # newest (labels) stays live (VERDICT r6 item 7)
+        trim_pins(spark, base, keep=1)
+    if not converged:
+        # a component with diameter > 20 would otherwise return silently
+        # wrong (non-minimal) labels while the oracle computes the true
+        # transitive closure — fail loudly instead.
+        raise RuntimeError(
+            "llm_dedup_groups: min-label propagation did not converge "
+            "in 20 rounds (near-dup component diameter > 20); raise the "
+            "round cap for this corpus"
+        )
     sym.unpersist()
     comp = labels.select(
         F.col("v").alias("doc_id"), F.col("label").alias("keep_id")

@@ -5250,7 +5250,7 @@ def test_correlated_scalar_reserved_prefix_collision_typed(eng):
         on={"o_custkey": "o_custkey"},
     ))
     with pytest.raises(SpecError, match="__t_cs_"):
-        eng._apply_correlated_scalar(df, pred, "orders")
+        eng._apply_correlated_scalar(df, pred, "orders", frozenset())
 
 
 def test_correlated_scalar_type_mismatch_fails_typed(eng):
@@ -7119,3 +7119,184 @@ def test_sketch_split_resolves_dotted_group_keys(eng):
     assert "Join" in _formatted_plan(eng, df)  # split fired
     assert df.columns == ["g.dot", "n", "a"]
     assert df.count() > 0
+
+
+def test_direct_query_pins_utc(eng):
+    """Engine.query is a public entry of its own, not only reached
+    through a registered key's build (which pins the zone too): a
+    caller that moved the session zone still gets UTC epochs."""
+    import datetime as dt
+
+    key = "spark.sql.session.timeZone"
+    prev = eng.spark.conf.get(key)
+    eng.entity("orders")  # spend the catalog's once-per-session pin
+    eng.spark.conf.set(key, "America/New_York")
+    try:
+        rows = eng.query({"orders": {
+            "o_orderkey": True,
+            "$select": {"d_us": {"$epoch_us": "o_orderdate"},
+                        "d": "o_orderdate"},
+            "$orderby": ["o_orderkey"], "$limit": 5,
+        }}).collect()
+    finally:
+        eng.spark.conf.set(key, prev)
+    assert rows
+    for r in rows:
+        midnight = dt.datetime.combine(r["d"], dt.time())
+        assert r["d_us"] == round(
+            (midnight - dt.datetime(1970, 1, 1)).total_seconds() * 1e6)
+
+
+def test_engine_query_is_reentrant(eng, monkeypatch):
+    """A query compiled while another is mid-compile on the same engine
+    must not change the first one's result: the $asof payload prune
+    reads the referenced-name set of its OWN spec."""
+    spec = {
+        "orders": {
+            "o_orderkey": True,
+            "events": {
+                "$asof": {
+                    "$left_on": "o_orderdate",
+                    "$right_on": "ts",
+                    "$per": "o_orderkey",
+                    "$tiebreak": "event_id",
+                    "$strategy": "forward",
+                },
+                "event_type": True,
+            },
+        }
+    }
+    want = sorted(eng.query(spec).collect())
+    real_entity = eng.catalog.entity
+    nested = []
+
+    def entity(name):
+        if not nested:
+            nested.append(name)
+            eng.query({"customer": {"c_custkey": True}})
+        return real_entity(name)
+
+    monkeypatch.setattr(eng.catalog, "entity", entity)
+    got = sorted(eng.query(spec).collect())
+    assert nested and want and got == want
+
+
+def _registered_compiler_specs():
+    """(key, spec) for every Engine.query call the registered
+    compiler_* builders make, captured before anything compiles."""
+    from naqed_spark.registry import QUERIES, load_all
+
+    load_all()
+
+    class _Captured(Exception):
+        pass
+
+    captured = []
+
+    def capture(self, spec, params=None):
+        captured.append((key, spec, params))
+        raise _Captured
+
+    real = Engine.query
+    Engine.query = capture
+    try:
+        for key, fn in QUERIES.items():
+            if key.startswith("compiler_"):
+                try:
+                    fn.__wrapped__(None, SF_DIR)
+                except _Captured:
+                    pass
+    finally:
+        Engine.query = real
+    return captured
+
+
+def test_every_spec_reference_is_a_standalone_string():
+    """The $asof payload prune keeps only columns named somewhere in the
+    spec (engine._collect_spec_strings), so it is sound only while every
+    column reference the parser produces is itself a literal string of
+    the spec — never split, joined or derived from one. Walk the parsed
+    form of every registered compiler spec (uncorrelated $scalar and
+    correlated-scalar inners included) and check every string it holds;
+    the only exceptions are operator names and enumerated modes, which
+    name no column. The walk must reach every parse-tree class, so a new
+    grammar node is checked as soon as a registered key uses it."""
+    import dataclasses
+
+    from naqed_spark.compiler import spec as S
+    from naqed_spark.compiler.engine import _collect_spec_strings
+
+    # attributes holding an operator name or an enumerated mode
+    modes = {
+        "Expr.op", "Predicate.op", "AggSpec.op", "WindowFn.op",
+        "PivotSpec.op", "SetSpec.op", "Node.how", "AsofSpec.how",
+        "AsofSpec.strategy", "JoinFramesSpec.how", "StreamJoin.how",
+        "QuerySpec.grouping",
+    }
+    # (column, direction) pairs: only the column is a reference
+    ordered = {"QuerySpec.orderby", "WindowFn.order"}
+    # $traverse endpoint defaults: they name columns of the $edges
+    # result, which the engine checks against that result's columns
+    defaults = {("TraverseSpec.src", "src"), ("TraverseSpec.dst", "dst")}
+
+    def without_scalars(obj, inners):
+        if isinstance(obj, dict):
+            inner = obj.get("$scalar")
+            if set(obj) == {"$scalar"} and "$on" not in inner:
+                inners.append(inner)  # resolved before parsing
+                return 0
+            return {k: without_scalars(v, inners) for k, v in obj.items()}
+        if isinstance(obj, list):
+            return [without_scalars(v, inners) for v in obj]
+        return obj
+
+    def parsed(spec):
+        inners = []
+        out = [S.parse_query(without_scalars(spec, inners))]
+        for inner in inners:
+            out += parsed(inner)
+        return out
+
+    visited = set()
+    bad = []
+
+    def walk(obj, where, names, key):
+        if isinstance(obj, str):
+            if (where not in modes and (where, obj) not in defaults
+                    and obj not in names):
+                bad.append((key, where, obj))
+        elif isinstance(obj, (list, tuple)):
+            if where in ordered and isinstance(obj, tuple):
+                obj = obj[:1]
+            for x in obj:
+                walk(x, where, names, key)
+        elif isinstance(obj, dict):
+            for k, v in obj.items():
+                walk(k, where, names, key)
+                walk(v, where, names, key)
+        elif isinstance(obj, S.CorrelatedScalar):
+            visited.add(type(obj))
+            walk(obj.on, "CorrelatedScalar.on", names, key)
+            inner = {k: v for k, v in obj.inner.items() if k != "$on"}
+            for q in parsed(inner):
+                walk(q, "QuerySpec", names, key)
+        elif type(obj).__module__ == S.__name__:
+            visited.add(type(obj))
+            for attr, v in vars(obj).items():
+                walk(v, f"{type(obj).__name__}.{attr}", names, key)
+
+    specs = _registered_compiler_specs()
+    assert specs
+    for key, spec, params in specs:
+        spec = S.bind_args(spec, params or {})
+        names = _collect_spec_strings(spec, set())
+        for q in parsed(spec):
+            walk(q, "QuerySpec", names, key)
+    assert not bad, bad[:10]
+    tree_classes = {
+        c for c in vars(S).values()
+        if isinstance(c, type) and c.__module__ == S.__name__
+        and (dataclasses.is_dataclass(c) or c in (
+            S.JoinFramesSpec, S.ExistsQuery, S.SubqueryIn))
+    }
+    assert tree_classes - visited == set()

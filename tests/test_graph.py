@@ -151,3 +151,117 @@ def test_fixpoint_loops_pinned_rdds_flat(spark):
             f"{key}: checkpoint leak — {len(mine)} new pinned RDDs"
         )
         unpersist_rdds(spark, mine)
+
+
+# Fixed-round vs converged-stop equivalence for the two loops whose stop
+# test compares a round's observed summary with the previous round's.
+# Each graph sits on a boundary: the path's last vertex only reaches its
+# cheapest cost in round 6 of 6, the lollipop tails peel one vertex per
+# round, and the capped cases stop on the cap with work still left.
+_PATH7 = [(i, i + 1, i + 1) for i in range(6)] + [(0, 3, 50), (0, 6, 100)]
+_CLIQUE = [(a, b, abs(a - b)) for a in range(4) for b in range(4) if a != b]
+
+
+def _python_bellman_ford(edges, source, rounds):
+    """The fixed-round spelling: every round runs, no early stop."""
+    dist = {source: 0}
+    for _ in range(rounds):
+        nxt = dict(dist)
+        for s, d, w in edges:
+            if s in dist and dist[s] + w < nxt.get(d, float("inf")):
+                nxt[d] = dist[s] + w
+        dist = nxt
+    return dist
+
+
+@pytest.mark.parametrize(
+    "edges,rounds",
+    [(_PATH7, 6), (_PATH7, 4), (_CLIQUE, 6)],
+    ids=["path7-improves-in-last-round", "path7-capped", "clique-converges"],
+)
+def test_bellman_ford_converged_stop_matches_fixed_rounds(
+    spark, edges, rounds
+):
+    from naqed_spark.queries.graph import bellman_ford
+
+    e = spark.createDataFrame(edges, "src long, dst long, w long")
+    got = {
+        r["v"]: r["cost"] for r in bellman_ford(spark, e, 0, rounds).collect()
+    }
+    assert got == _python_bellman_ford(edges, 0, rounds)
+
+
+def _lollipop(tail):
+    """Triangle {100, 101, 102} with a ``tail``-vertex path hanging off
+    vertex 100: a k=2 peel removes exactly one tail vertex per round."""
+    pairs = [(100, 101), (101, 102), (100, 102), (100, 1)]
+    pairs += [(i, i + 1) for i in range(1, tail)]
+    return pairs
+
+
+def _python_kcore_peel(pairs, k, rounds):
+    """The fixed-round spelling: every round runs, no early stop."""
+    edges = set(pairs) | {(b, a) for a, b in pairs}
+    for _ in range(rounds):
+        deg = {}
+        for v, _n in edges:
+            deg[v] = deg.get(v, 0) + 1
+        edges = {(v, n) for v, n in edges if deg[v] >= k and deg[n] >= k}
+    return edges
+
+
+@pytest.mark.parametrize(
+    "tail", [8, 10, 3],
+    ids=["peels-until-round-8", "capped-at-round-8", "converges-in-round-3"],
+)
+def test_kcore_converged_stop_matches_fixed_rounds(spark, tail):
+    from naqed_spark.queries.graph import kcore_peel
+
+    pairs = _lollipop(tail)
+    und = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "v long, n long"
+    )
+    got = {(r["v"], r["n"]) for r in kcore_peel(spark, und, 2, 8).collect()}
+    assert got == _python_kcore_peel(pairs, 2, 8)
+
+
+def test_fixpoint_superstep_records(spark, caplog):
+    """The stop decisions are visible: one DEBUG record per loop. The
+    nation graph's direct same-region edges are already cheapest, so
+    round 2 changes nothing and Bellman-Ford stops there, not at the
+    6-round cap; a k=2 peel of a 3-vertex tail stops one round after
+    the tail is gone."""
+    import logging
+
+    from naqed_spark.queries.graph import kcore_peel
+
+    with caplog.at_level(logging.DEBUG, logger="naqed_spark"):
+        QUERIES["graph_shortest_path_weighted"](spark, SF_DIR).collect()
+        pairs = _lollipop(3)
+        kcore_peel(spark, spark.createDataFrame(
+            pairs + [(b, a) for a, b in pairs], "v long, n long"
+        ), 2, 8)
+    msgs = [r.getMessage() for r in caplog.records if r.name == "naqed_spark"]
+    assert msgs == [
+        "fixpoint loop=graph_shortest_path_weighted supersteps=2 cap=6"
+        " stop=converged",
+        "fixpoint loop=graph_kcore supersteps=4 cap=8 stop=converged",
+    ]
+
+
+def test_tune_session_sizes_shuffles_from_default_parallelism(
+    spark, monkeypatch
+):
+    """Shuffle partitions follow the session's own scheduler parallelism,
+    not an environment default that may disagree with it."""
+    n = spark.sparkContext.defaultParallelism
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(n + 5))
+    monkeypatch.setattr(spark, "_naqed_tuned", False)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        tune_session(spark)
+        assert spark.conf.get(key) == str(n)
+    finally:
+        spark.conf.set(key, prev)
