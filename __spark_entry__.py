@@ -30,25 +30,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return join_multiway_star(spark, SMOKE_SF_DIR)
 
 
-def _wrap(fn) -> Callable[[SparkSession, str], DataFrame]:
-    """Apply session tuning (UTC tz, ANSI off, AQE) before each query —
-    the driver hands us its own session, not one built by get_spark()."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from naqed_spark.session import tune_session
-
-        tune_session(spark)
-        return fn(spark, sf_dir)
-
-    return run
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     from naqed_spark.registry import QUERIES, load_all, ordered_keys
 
     load_all()
-    return {k: _wrap(QUERIES[k]) for k in ordered_keys()}
+    return {k: QUERIES[k] for k in ordered_keys()}
 
 
 def oracle_sql() -> dict[str, str]:

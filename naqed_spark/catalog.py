@@ -13,9 +13,11 @@ compiler can emit ``broadcast()`` hints on their join side.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from naqed_spark.session import session_fragment
 
 TABLES = [
     "region",
@@ -94,48 +96,6 @@ RELATIONSHIPS: list[Relationship] = [
 ]
 
 
-# Per-process cache of inferred parquet schemas. The entity files are
-# immutable within a run, but a schema-less ``spark.read.parquet`` pays a
-# driver-side footer read + file listing on EVERY call (~95 ms measured at
-# sf0.1) — a constant that lands inside every timed query build. Passing
-# the cached StructType back cuts the read constant ~5x (~19 ms); the
-# executed plan is byte-identical (same schema either way). Keyed by full
-# path so distinct sf_dirs never collide. At cluster scale the same role
-# is played by the metastore/table catalog.
-_SCHEMA_CACHE: dict = {}
-
-
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    sch = _SCHEMA_CACHE.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
-
-
-def _session_df_cache(spark: SparkSession) -> dict | None:
-    """Per-session cache of ANALYZED entity DataFrames (r16 opt).
-
-    Even with the schema cache above, every ``load()`` call pays the
-    ``spark.read`` py4j round trips + DataSource resolution + file-index
-    construction again (~15-20 ms per entity per query build — a constant
-    that lands inside every timed build, ×3-6 entities for the join
-    suites). The entity files are immutable for the life of a run, so the
-    resolved scan DataFrame is reusable exactly like a metastore table:
-    this returns a dict stored ON the session object, so it can never
-    outlive its session or leak a stopped one. No DATA is cached — the
-    value is a lazy plan; every action still scans parquet."""
-    cache = getattr(spark, "_naqed_df_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            spark._naqed_df_cache = cache
-        except Exception:
-            return None  # session proxy rejects attributes: build fresh
-    return cache
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one entity. Plain parquet scan — pushdown/pruning stay enabled.
 
@@ -145,34 +105,25 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ns-long via the legacy conf and truncate to µs with exact integer
     division, and plain µs TIMESTAMP (r5+), which both engines read
     directly. Both paths normalize to TimestampType µs — byte-identical to
-    DuckDB, which also truncates ns → µs. Session TZ is pinned to UTC so
+    DuckDB, which also truncates ns → µs.
+
+    The analyzed scan is kept in the session's frame store, so a query
+    build that names an entity again reuses it; the first use on a
+    session tunes it, which pins the session timezone to UTC so
     date/epoch projections are deterministic.
     """
     if name not in TABLES:
         raise KeyError(f"unknown entity {name!r}; known: {TABLES}")
-    # Session TZ pin: one conf.set py4j round trip per SESSION, not per
-    # load() call (r17; a query build calls load 1-6×, and the set was
-    # paid even on the df-cache hit path).
-    if not getattr(spark, "_naqed_tz_pinned", False):
-        try:
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            spark._naqed_tz_pinned = True
-        except Exception:
-            pass
+    return session_fragment(
+        spark, ("entity", sf_dir, name), lambda: _read(spark, sf_dir, name)
+    )
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    cache = _session_df_cache(spark)
-    if cache is not None and path in cache:
-        return cache[path]
-    df = _load_uncached(spark, path, name)
-    if cache is not None:
-        cache[path] = df
-    return df
-
-
-def _load_uncached(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
+        df = spark.read.parquet(path)
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType
 
@@ -181,7 +132,7 @@ def _load_uncached(spark: SparkSession, path: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         # µs file: NTZ under UTC session TZ → same instant as TimestampType
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return _read_parquet(spark, path)
+    return spark.read.parquet(path)
 
 
 @dataclass
@@ -190,12 +141,9 @@ class Catalog:
 
     spark: SparkSession
     sf_dir: str
-    _cache: dict[str, DataFrame] = field(default_factory=dict)
 
     def entity(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            self._cache[name] = load(self.spark, self.sf_dir, name)
-        return self._cache[name]
+        return load(self.spark, self.sf_dir, name)
 
     def relationship(self, src_entity: str, name: str) -> Relationship:
         for rel in RELATIONSHIPS:

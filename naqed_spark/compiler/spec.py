@@ -175,8 +175,7 @@ Round-8 extensions:
 Round-10 extensions (VERDICT r9 item 7's compiler capability; registered
 as driver keys in round 11 — `compiler_pivot`, `compiler_unpivot`,
 `compiler_sample_stratified`, each with a DuckDB oracle and a
-ground-truth battery replay, queued behind the verification backlog via
-registry.DEFERRED):
+ground-truth battery replay):
 
     "$pivot": {"$on": col,            # wide conditional aggregation:
                "$values": [v, ...],   # one output column per EXPLICIT

@@ -4,9 +4,10 @@ import time). ``registry.load_all()`` imports this package; keep the list
 below in sync as modules land.
 
 The driver-facing key order is ``registry.ordered_keys()``, computed
-from the committed CORRECTNESS_r*.json artifacts since round 8
-(never-driver-checked keys first, then stalest-signal-first).
-Import order below only breaks ties among equally-stale keys.
+from the committed CORRECTNESS_r*.json artifacts: never-driver-checked
+keys first, then keys rewritten since their signal
+(``registry.TOUCHED``), then stalest-signal-first. Import order below
+only breaks ties among equally-stale keys.
 """
 
 from naqed_spark.queries import (  # noqa: F401

@@ -22,6 +22,7 @@ import logging
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from naqed_spark.catalog import load  # re-export for query modules
+from naqed_spark.session import session_fragment, session_state
 
 __all__ = [
     "load",
@@ -35,34 +36,9 @@ __all__ = [
     "checkpoint_observed",
     "log_supersteps",
     "scoped_persist",
-    "release_scoped_persists",
     "session_fragment",
     "spread",
 ]
-
-
-def session_fragment(spark, key, builder):
-    """Per-session cache of an ANALYZED lazy helper frame shared by
-    several registered keys (r17, VERDICT r16 item 2 — the catalog.py
-    analyzed-scan idiom one level up): building a frame like the graph
-    edge table or the MinHash signature table costs hundreds of py4j
-    round trips per query build, and 5-27 registered keys each rebuild
-    the identical plan. The dict lives ON the session object (cannot
-    outlive it, one per session); the value is a LAZY DataFrame — no
-    data, no results, every action still computes from parquet. Callers
-    that persist the fragment must re-mark it on every call (persist
-    marks are released between builds by the registry): keep
-    ``scoped_persist`` at the call site, never inside ``builder``."""
-    cache = getattr(spark, "_naqed_frag_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            spark._naqed_frag_cache = cache
-        except Exception:
-            return builder()  # session proxy rejects attributes
-    if key not in cache:
-        cache[key] = builder()
-    return cache[key]
 
 
 def spread(df):
@@ -80,69 +56,23 @@ def spread(df):
     buys (the r16 range-bucket persist lesson, applied to repartition)."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-# r16 opt (guide §5 "unpersist when done"): query builders persist frames
-# their OWN plan reuses 2-5×, but a lazy builder never sees the consuming
-# action, so it cannot unpersist afterwards — and a session that runs many
-# queries (the oracle sweep, a real pipeline) accumulated every mark until
-# storage eviction + GC churn showed up as multi-second stalls on
-# unrelated keys (measured: 417-key sweep total exec 211 s → 247 s purely
-# from accumulation). ``scoped_persist`` registers the mark; the registry
-# releases all of the PREVIOUS query's marks when the NEXT query builds.
-# Releasing a persist mark is always safe — unlike a checkpoint, the
-# lineage recomputes — so the worst case for an unusual caller
-# (build A, build B, then run A) is a recompute, never a wrong answer.
-# keyed per SparkSession (r16 review): marks registered on session A
-# must never be released by a build on session B — the release is a
-# same-session lifecycle, not a process-wide one. Entries are popped on
-# release, so the dict only holds the current inter-build window's marks.
-# r17 (VERDICT r16 item 9 / ADVICE): keyed by the SESSION OBJECT, not
-# id(session) — a recycled id() after a session was GC'd could inherit
-# another session's mark list. A weak key would not help retention (the
-# DataFrame values hold strong references back to their session), so
-# abandoned-session cleanup is explicit instead: every release call
-# prunes entries whose session has been stopped (their JVM-side caches
-# died with the context; holding the Python DataFrames only pinned a
-# dead session's object graph).
-_SCOPED_PERSISTS: dict = {}
-
-
-def _session_stopped(spark) -> bool:
-    """True only when the context is PROVABLY stopped. An exception from
-    the sparkContext accessor means "cannot tell" (e.g. a Connect-style
-    session) — keep the entry so its release still unpersists (r17
-    review: pruning on 'cannot tell' would pop a live session's marks
-    without ever unpersisting them)."""
-    try:
-        return spark.sparkContext._jsc is None
-    except Exception:
-        return False
-
 
 def scoped_persist(df):
     """Persist ``df`` for intra-query subtree reuse; the mark is released
-    when the next registered query builds ON THE SAME SESSION (see
-    registry.query)."""
+    when the next registered query builds on the same session
+    (``session.begin_build``).
+
+    A lazy builder never sees the consuming action, so it cannot
+    unpersist afterwards, and a session that runs many queries (the
+    oracle sweep, a real pipeline) would otherwise accumulate every mark
+    until storage eviction and GC churn stall unrelated keys (measured:
+    417-key sweep total exec 211 s → 247 s purely from accumulation).
+    Releasing a persist mark is always safe — unlike a checkpoint, the
+    lineage recomputes — so the worst case for an unusual caller (build
+    A, build B, then run A) is a recompute, never a wrong answer."""
     df.persist()
-    _SCOPED_PERSISTS.setdefault(df.sparkSession, []).append(df)
+    session_state(df.sparkSession).persists.append(df)
     return df
-
-
-def release_scoped_persists(spark=None) -> None:
-    """Release scoped marks — ``spark``'s own when given, else all.
-    Also drops entries for sessions that have been stopped since their
-    marks were registered (nothing to unpersist — the context is gone)."""
-    for s in [s for s in _SCOPED_PERSISTS if _session_stopped(s)]:
-        _SCOPED_PERSISTS.pop(s, None)
-    if spark is None:
-        old = [df for lst in _SCOPED_PERSISTS.values() for df in lst]
-        _SCOPED_PERSISTS.clear()
-    else:
-        old = _SCOPED_PERSISTS.pop(spark, [])
-    for df in old:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
 
 
 def sorted_pairs_expr(array_col: str, field_a: str, field_b: str) -> str:

@@ -1185,9 +1185,7 @@ def compiler_window_frame(spark, sf_dir):
 # ---------------- round 11: the round-10 compiler capability registered
 # as driver keys (VERDICT r10 item 3). All three were landed engine-level
 # in round 10 with twin-pinned tests; registration waited for the
-# verification backlog per the backlog-freeze discipline, and they enter
-# the rotation via registry.DEFERRED so they queue BEHIND the r10
-# backlog + TOUCHED re-checks instead of jumping the window front.
+# verification backlog per the backlog-freeze discipline.
 
 
 @query(
@@ -1322,9 +1320,7 @@ def compiler_sample_stratified(spark, sf_dir):
 
 # ---------------- round 12: the round-11 $asof extensions and the new
 # subtotal-grid spellings registered as driver keys (VERDICT r11 items
-# 2-3). All five enter the rotation via registry.DEFERRED so they queue
-# BEHIND the scheduled TOUCHED re-checks (the 7-key r11 backlog must
-# get its hard signals first).
+# 2-3).
 
 
 @query(

@@ -1,4 +1,4 @@
-"""Tuned SparkSession factory.
+"""Tuned SparkSession factory and the per-session state.
 
 Scale posture (SURVEY.md §4.2/§4.3): AQE on (runtime coalescing, skew-join
 splitting), shuffle partitions sized to the scheduler's
@@ -13,8 +13,11 @@ deterministic across engines.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+
+_UTC = ("spark.sql.session.timeZone", "UTC")
 
 
 def get_spark(app_name: str = "naqed-spark") -> SparkSession:
@@ -24,60 +27,98 @@ def get_spark(app_name: str = "naqed-spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("NAQED_DRIVER_MEM", "16g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    return tune_session(builder.getOrCreate())
 
 
-def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable determinism/perf confs to an externally
-    provided session (the driver hands us its own session — we must not
-    assume it was built by ``get_spark``).
+@dataclass
+class SessionState:
+    """What the package keeps per SparkSession. It is stored on the
+    session object itself, so it lives and dies with that session.
 
-    Shuffle partitions come from the session's own
-    ``defaultParallelism`` — the cores the caller gave it — never from
-    an environment default: a caller's ``local[4]`` session must not
-    run 32-task stages.
+    ``frames``: lazy analyzed DataFrames keyed ``(kind, sf_dir, ...)`` —
+    the entity scans of ``catalog.load`` and the helper fragments that
+    several registered keys share (``session_fragment``). The entity
+    files are immutable for the life of a run, so a resolved scan is
+    reusable like a metastore table, and reusing it saves the py4j round
+    trips of rebuilding the plan on every query build. No data is held:
+    every action still reads parquet.
 
-    Idempotent and cached per session object (round 10, VERDICT r9 item
-    5): the driver entry wraps EVERY query call with this, so the 5
-    ``conf.set`` py4j round trips must be paid once per session, not
-    once per key."""
-    if getattr(spark, "_naqed_tuned", False):
-        return spark
+    ``persists``: the frames the current build marked with
+    ``scoped_persist``, released when the next registered build on this
+    session starts (``begin_build``)."""
+
+    frames: dict = field(default_factory=dict)
+    persists: list = field(default_factory=list)
+
+
+def _tune(spark: SparkSession) -> None:
     confs = [
-        ("spark.sql.session.timeZone", "UTC"),
+        _UTC,
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.ansi.enabled", "false"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ]
-    try:
-        # runtime-settable: an externally built session carries the 200
-        # default — size to the scheduler's parallelism like get_spark
-        confs.append((
+        # an externally built session carries the 200 default: size
+        # shuffles to the cores the caller gave it, never to an
+        # environment default
+        (
             "spark.sql.shuffle.partitions",
             str(spark.sparkContext.defaultParallelism),
-        ))
-    except Exception:
-        pass  # no SparkContext behind this session (Connect): keep its value
+        ),
+    ]
     for k, v in confs:
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # non-runtime-settable in some deployments; defaults are close
-    try:
-        spark._naqed_tuned = True
-    except Exception:
-        pass  # a session proxy that rejects attributes just re-tunes
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """The session's state; the first call attaches it and tunes the
+    session (UTC timezone, AQE, ANSI off, Arrow, shuffle partitions)."""
+    state = getattr(spark, "_naqed_state", None)
+    if state is None:
+        _tune(spark)
+        state = spark._naqed_state = SessionState()
+    return state
+
+
+def tune_session(spark: SparkSession) -> SparkSession:
+    """Apply the determinism/perf confs to a session the caller built
+    (the driver hands us its own session — we must not assume it came
+    from ``get_spark``). They are set once per session object, when its
+    state is attached."""
+    session_state(spark)
     return spark
+
+
+def begin_build(spark: SparkSession) -> None:
+    """The step every registered query build runs first: release the
+    previous build's scoped persist marks and re-pin the UTC timezone, in
+    case the caller changed it since the session was tuned."""
+    persists = session_state(spark).persists
+    for df in persists:
+        df.unpersist()
+    persists.clear()
+    try:
+        spark.conf.set(*_UTC)
+    except Exception:
+        pass  # a deployment that refuses the conf keeps its zone
+
+
+def session_fragment(spark: SparkSession, key: tuple, builder):
+    """The session's lazy frame under ``key`` (``(kind, sf_dir, ...)``),
+    built by ``builder()`` on the first call. Callers that persist the
+    frame must re-mark it on every call, since marks are released between
+    builds: keep ``scoped_persist`` at the call site, never inside
+    ``builder``."""
+    frames = session_state(spark).frames
+    if key not in frames:
+        frames[key] = builder()
+    return frames[key]
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

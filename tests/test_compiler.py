@@ -4628,11 +4628,14 @@ def test_stream_join_field_shadow_fails_typed(eng):
     typed — silent shadowing would make downstream $groupby/$agg
     ambiguous. No catalog dim currently shares a column name with
     events, so the drift guard is exercised by injecting a renamed dim
-    through the catalog cache (the engine reads entities through it)."""
+    into the session's frame store (the engine reads entities through
+    it)."""
+    from naqed_spark.session import session_state
+
+    frames = session_state(eng.spark).frames
+    key = ("entity", eng.catalog.sf_dir, "documents")
     real = eng.catalog.entity("documents")
-    eng.catalog._cache["documents"] = real.withColumnRenamed(
-        "lang", "props"
-    )
+    frames[key] = real.withColumnRenamed("lang", "props")
     try:
         with pytest.raises(SpecError, match="collides"):
             eng.query({"$stream": {
@@ -4644,7 +4647,7 @@ def test_stream_join_field_shadow_fails_typed(eng):
                 "$agg": {"n": {"$count": True}},
             }})
     finally:
-        eng.catalog._cache["documents"] = real
+        frames[key] = real
 
 
 @pytest.mark.parametrize(

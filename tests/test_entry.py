@@ -82,132 +82,40 @@ def test_entry_module_exposes_registry():
 
 
 def test_priority_keys_all_registered():
+    """The driver walks ``queries()`` in ``ordered_keys()`` order, and that
+    order holds every registered key exactly once."""
+    import __spark_entry__ as entry
     from naqed_spark import registry
 
     registry.load_all()
     ordered = registry.ordered_keys()
     assert sorted(ordered) == sorted(registry.QUERIES)
-    # the driver checks a fixed front window (~50): it must be filled
-    # with never-driver-checked keys while any exist, so every key gets
-    # first contact as promptly as the window allows. DEFERRED
-    # registrations are the one exception: new keys must not jump an
-    # outstanding backlog (VERDICT r10 item 1), so they queue behind
-    # the void-signal re-checks instead of the front block.
-    signal = registry._driver_signal_rounds()
-    never = [
-        k for k in registry.QUERIES
-        if k not in signal and k not in registry.DEFERRED
-    ]
-    front = ordered[: len(never)]
-    assert set(front) == set(never)
-
-
-def test_rotation_is_rewrite_aware():
-    """VERDICT r9 item 2: a key rewritten AFTER its last driver signal
-    carries a void signal and must requeue ahead of every checked-and-
-    untouched key, behind only the never-checked block.
-
-    VERDICT r12 item 1: the void set being EMPTY is the goal state
-    (every signal post-dates its key's last rewrite), not a failure —
-    all ordering checks below are conditional on debt actually
-    existing, so this test stays green at zero verification debt.
-    """
-    from naqed_spark import registry
-
-    registry.load_all()
-    signal = registry._driver_signal_rounds()
-    ordered = registry.ordered_keys()
-    pos = {k: i for i, k in enumerate(ordered)}
-
-    stale = [
-        k for k, rnd in registry.TOUCHED.items()
-        if k in signal and signal[k] < rnd
-    ]
-    untouched_checked = [
-        k for k in registry.QUERIES
-        if k in signal and signal[k] >= registry.TOUCHED.get(k, -1)
-    ]
-    never = [
-        k for k in registry.QUERIES
-        if k not in signal and k not in registry.DEFERRED
-    ]
-    best_untouched = (
-        min(pos[k] for k in untouched_checked) if untouched_checked
-        else len(ordered)
-    )
-    if stale:
-        # every void-signal key sorts ahead of every untouched checked
-        # key…
-        worst_stale = max(pos[k] for k in stale)
-        assert worst_stale < best_untouched
-        # …and behind the whole never-checked block.
-        if never:
-            assert min(pos[k] for k in stale) > max(pos[k] for k in never)
-    else:
-        # zero-debt state: nothing to order; the front of the rotation
-        # is the never-checked block (if any), covered below.
-        worst_stale = max(pos[k] for k in never) if never else -1
-    # DEFERRED registrations without a signal queue BEHIND the void
-    # re-checks (they must not jump an outstanding backlog) and ahead
-    # of valid-signal keys; once a key has a signal, DEFERRED is inert.
-    deferred_unchecked = [
-        k for k in registry.DEFERRED if k in registry.QUERIES
-        and k not in signal
-    ]
-    for k in deferred_unchecked:
-        assert pos[k] > worst_stale
-        assert pos[k] < best_untouched
-    # a TOUCHED entry older than (or equal to) the key's signal is inert:
-    # the driver re-checked after the rewrite, so the signal is valid.
-    for k, rnd in registry.TOUCHED.items():
-        if k in signal and signal[k] >= rnd:
-            assert pos[k] >= best_untouched
+    assert list(entry.queries()) == ordered
 
 
 def test_rotation_ordering_on_synthetic_states(monkeypatch):
-    """VERDICT r12 item 1 ("or better"): the live-state test above can
-    only exercise whichever debt state the repo happens to be in — at
-    zero debt the stale-ordering branch is dead code until the next
-    rewrite. This test fabricates every state class and asserts the
-    full contract deterministically, independent of CORRECTNESS_r*
-    artifacts on disk."""
+    """The three rotation buckets, on fabricated driver signals so every
+    bucket is exercised whatever CORRECTNESS_r*.json holds: never-checked
+    keys first, then keys rewritten after their signal (TOUCHED), then
+    the rest stalest-signal-first; a TOUCHED round at or below the key's
+    signal changes nothing; ties keep registration order."""
     from naqed_spark import registry
 
     registry.load_all()
-    keys = sorted(registry.QUERIES)[:8]
-    never, stale, deferred, old, fresh, untouched = keys[:6]
+    keys = list(registry.QUERIES)[:7]
+    never_a, never_b, stale, old, mid, fresh, inert = keys
+    signals = {stale: 5, old: 3, mid: 6, fresh: 9, inert: 6}
+    monkeypatch.setattr(registry, "_driver_signal_rounds", lambda: signals)
+    monkeypatch.setattr(
+        registry, "QUERIES", {k: registry.QUERIES[k] for k in keys}
+    )
 
-    def fake_signals():
-        return {
-            stale: 5,       # rewritten at r7 below -> void
-            old: 3,         # oldest valid signal
-            fresh: 9,       # newest valid signal
-            untouched: 6,   # valid, never rewritten
-            # `never` and `deferred` have NO signal
-        }
-
-    monkeypatch.setattr(registry, "_driver_signal_rounds", fake_signals)
-    monkeypatch.setattr(registry, "TOUCHED", {stale: 7, untouched: 2})
-    monkeypatch.setattr(registry, "DEFERRED", {deferred})
-
-    ordered = registry.ordered_keys()
-    pos = {k: i for i, k in enumerate(ordered)}
-    # bucket order: never-checked < void-signal < deferred-unchecked
-    # < valid signals (stalest first)
-    assert pos[never] < pos[stale] < pos[deferred] < pos[old]
-    # valid signals sort stalest-first; an inert TOUCHED (signal >=
-    # rewrite round) does not demote its key out of the valid bucket
-    assert pos[old] < pos[untouched] < pos[fresh]
-
-    # zero-debt state: no stale, no deferred — never-checked still
-    # fronts, valid signals still stalest-first
+    monkeypatch.setattr(registry, "TOUCHED", {stale: 7, inert: 6})
+    assert registry.ordered_keys() == [
+        never_a, never_b, stale, old, mid, inert, fresh
+    ]
+    # with TOUCHED empty, `stale` holds a valid r5 signal
     monkeypatch.setattr(registry, "TOUCHED", {})
-    monkeypatch.setattr(registry, "DEFERRED", set())
-    ordered2 = registry.ordered_keys()
-    pos2 = {k: i for i, k in enumerate(ordered2)}
-    # never-checked still fronts its bucket ahead of every signal-holder
-    assert pos2[never] < pos2[old]
-    # with TOUCHED empty, `stale` holds a VALID r5 signal — newer than
-    # old's r3, older than untouched's r6 — so the stalest-first order
-    # inside the valid bucket is old < stale < untouched < fresh
-    assert pos2[old] < pos2[stale] < pos2[untouched] < pos2[fresh]
+    assert registry.ordered_keys() == [
+        never_a, never_b, old, stale, mid, inert, fresh
+    ]

@@ -247,21 +247,3 @@ def test_fixpoint_superstep_records(spark, caplog):
         " stop=converged",
         "fixpoint loop=graph_kcore supersteps=4 cap=8 stop=converged",
     ]
-
-
-def test_tune_session_sizes_shuffles_from_default_parallelism(
-    spark, monkeypatch
-):
-    """Shuffle partitions follow the session's own scheduler parallelism,
-    not an environment default that may disagree with it."""
-    n = spark.sparkContext.defaultParallelism
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(n + 5))
-    monkeypatch.setattr(spark, "_naqed_tuned", False)
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "200")
-    try:
-        tune_session(spark)
-        assert spark.conf.get(key) == str(n)
-    finally:
-        spark.conf.set(key, prev)

@@ -157,44 +157,6 @@ def test_no_oracle_emits_hugeint(duck):
     assert not bad, bad
 
 
-def test_priority_rotation_covers_all_keys():
-    """ordered_keys() (round-8 computed rotation, round-10 rewrite-aware
-    buckets): every registered key exactly once; never-driver-checked
-    keys strictly precede all signalled keys; signalled keys whose
-    implementation was rewritten AFTER their signal (registry.TOUCHED)
-    precede untouched ones (their old signals describe deleted code);
-    within each bucket stalest-round-first; and the driver-facing dicts
-    in __spark_entry__ follow that order."""
-    import __spark_entry__ as entry
-    from naqed_spark.registry import (
-        DEFERRED,
-        TOUCHED,
-        _driver_signal_rounds,
-        ordered_keys,
-    )
-
-    keys = ordered_keys()
-    assert sorted(keys) == sorted(QUERIES)
-    assert len(keys) == len(set(keys))
-    signal = _driver_signal_rounds()
-
-    def bucket(k):
-        # round 11: DEFERRED registrations without a signal queue
-        # BEHIND the void re-checks (bucket 2) so new keys never jump
-        # an outstanding backlog; valid signals are bucket 3.
-        sig = signal.get(k, -1)
-        if sig < 0:
-            return 2 if k in DEFERRED else 0
-        return 1 if sig < TOUCHED.get(k, -1) else 3
-
-    order = [(bucket(k), signal.get(k, -1)) for k in keys]
-    assert order == sorted(order), (
-        "rotation must be (never-checked, rewritten-since-signal, "
-        "valid-signal) bucketed, stalest-first within each"
-    )
-    assert list(entry.queries()) == keys
-
-
 def test_kernel_checkpoint_hygiene(spark, monkeypatch):
     """VERDICT r4 item 6: the blocked vector kernel must not accumulate
     pinned RDDs. Multi-block (forced via env): exactly ONE result-sized

@@ -103,51 +103,3 @@ def test_knn_fast_path_matches_blocked_path(spark):
     finally:
         del os.environ["NAQED_KNN_BLOCK_ROWS"]
     assert fast_rows == blocked_rows
-
-
-def test_catalog_df_cache_is_per_session_and_lazy(spark):
-    """load() returns the SAME analyzed frame within a session (the r16
-    build-constant win), events normalization included; the cache holds
-    lazy plans only (no InMemoryRelation — nothing is result-cached)."""
-    from naqed_spark.catalog import load
-
-    a = load(spark, SF_DIR, "lineitem")
-    assert load(spark, SF_DIR, "lineitem") is a
-    ev = load(spark, SF_DIR, "events")
-    assert str(ev.schema["ts"].dataType) == "TimestampType()"
-    assert "InMemoryRelation" not in a._jdf.queryExecution().toString()
-    # distinct sf_dirs must never collide
-    other = SF_DIR.replace("0.001", "0.01")
-    if os.path.isdir(other):
-        assert load(spark, other, "lineitem") is not a
-
-
-def test_scoped_persists_released_on_next_query_build(spark):
-    """Builders persist frames their own plan reuses (user_edges, LSH
-    sigs, baskets); the registry must release those marks when the NEXT
-    query builds, so a long session (oracle sweep, real pipeline) never
-    accumulates cached blocks until eviction/GC stalls. Release is safe
-    by construction: a persist mark recomputes from lineage."""
-    from naqed_spark.queries import _util
-
-    jsc = spark.sparkContext._jsc.sc()
-
-    def n_cached():
-        return jsc.getPersistentRDDs().size()
-
-    # build (not run) a graph key: user_edges registers a scoped mark
-    df_a = QUERIES["graph_degree"](spark, SF_DIR)
-    assert len(_util._SCOPED_PERSISTS) >= 1
-    marked = len(_util._SCOPED_PERSISTS)
-    # building the next query releases the previous query's marks
-    QUERIES["filter_comparison"](spark, SF_DIR)
-    assert len(_util._SCOPED_PERSISTS) == 0
-    # and the released frame still computes correctly from lineage
-    assert df_a.limit(1).count() in (0, 1)
-    # a query that persists AND self-unpersists (bfs) must stay green
-    # after an interleaved release (CacheManager dedup + re-mark)
-    QUERIES["graph_reachability_bfs"](spark, SF_DIR).limit(1).collect()
-    QUERIES["filter_comparison"](spark, SF_DIR)
-    assert len(_util._SCOPED_PERSISTS) == 0
-    assert marked >= 1 and n_cached() >= 0  # API sanity, no leak assertion:
-    # localCheckpoint pins (iterative keys) are managed separately

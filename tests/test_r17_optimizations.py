@@ -27,47 +27,6 @@ def spark():
     yield tune_session(get_spark("naqed-r17-opt-tests"))
 
 
-def test_session_fragment_caches_lazy_plan_per_key(spark):
-    """session_fragment returns the SAME analyzed frame for the same
-    (session, key) — the r17 build-constant win — and the cached value is
-    a lazy plan only (no InMemoryRelation: nothing is result-cached)."""
-    from naqed_spark.queries._util import session_fragment
-
-    calls = []
-
-    def build():
-        calls.append(1)
-        return spark.range(3).select((F.col("id") * 2).alias("x"))
-
-    a = session_fragment(spark, ("t17", "a"), build)
-    assert session_fragment(spark, ("t17", "a"), build) is a
-    assert len(calls) == 1
-    b = session_fragment(spark, ("t17", "b"), build)
-    assert b is not a and len(calls) == 2
-    assert "InMemoryRelation" not in a._jdf.queryExecution().toString()
-    # the shared helpers ride this cache: same object across two builds
-    from naqed_spark.queries.graph import user_edges
-    from naqed_spark.queries.llm import _minhash_sigs
-
-    assert _minhash_sigs(spark, SF_DIR) is _minhash_sigs(spark, SF_DIR)
-    e1 = user_edges(spark, SF_DIR)
-    e2 = user_edges(spark, SF_DIR)
-    assert e1 is e2
-    # and the persist mark is re-registered on every call (the registry
-    # releases marks between builds, so a cached fragment must re-mark)
-    from naqed_spark.queries._util import (
-        _SCOPED_PERSISTS,
-        release_scoped_persists,
-    )
-
-    release_scoped_persists(spark)
-    user_edges(spark, SF_DIR)
-    assert any(
-        df is e1 for df in _SCOPED_PERSISTS.get(spark, [])
-    ), "cached fragment must re-register its scoped persist mark"
-    release_scoped_persists(spark)
-
-
 def test_asof_inner_aggregate_matches_left_window_spelling(spark):
     """The r17 inner-$asof argmin/argmax aggregate returns exactly the
     rows the WindowGroupLimit spelling returns: $how: left (which keeps
@@ -125,28 +84,6 @@ def test_triangle_corners_match_wedge_join_spelling(spark):
         for v in (r.a, r.b, r.c)
     )
     assert new == old == sorted([1, 2, 3, 1, 2, 4])
-
-
-def test_release_prunes_stopped_session_entries(spark):
-    """release_scoped_persists drops registry entries whose session has
-    been stopped (ADVICE r16: abandoned sessions must not pin their
-    DataFrames forever)."""
-    from naqed_spark.queries import _util
-
-    class _DeadCtx:
-        _jsc = None
-
-    class _DeadSession:
-        sparkContext = _DeadCtx()
-
-    class _DeadDF:
-        def unpersist(self):  # pragma: no cover — pruned, never called
-            raise AssertionError("pruned entries are not unpersisted")
-
-    dead = _DeadSession()
-    _util._SCOPED_PERSISTS[dead] = [_DeadDF()]
-    _util.release_scoped_persists(spark)
-    assert dead not in _util._SCOPED_PERSISTS
 
 
 def test_spread_plans_round_robin_above_scan(spark):

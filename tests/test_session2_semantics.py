@@ -138,28 +138,6 @@ def test_zorder_files_prune_on_both_dims(spark):
     assert best >= len(stats) // 3, stats
 
 
-def test_schema_cache_reads_are_schema_identical(spark):
-    """catalog._read_parquet (round 9): the cached-StructType read path
-    must produce byte-identical schemas to a fresh footer-inferred read —
-    and the cache must actually populate so later builds skip the ~95 ms
-    footer/listing constant."""
-    from naqed_spark import catalog
-
-    sf = "/root/testdata/sf0.001"
-    for name in ("lineitem", "events", "documents"):
-        catalog._SCHEMA_CACHE.pop(f"{sf}/{name}.parquet", None)
-        # r16: the session df-cache sits ABOVE the schema cache and would
-        # satisfy the load without touching _read_parquet — clear it too
-        # so this test exercises the schema-cache path it pins
-        df_cache = catalog._session_df_cache(spark)
-        if df_cache is not None:
-            df_cache.pop(f"{sf}/{name}.parquet", None)
-        first = catalog.load(spark, sf, name).schema  # populates cache
-        assert f"{sf}/{name}.parquet" in catalog._SCHEMA_CACHE
-        second = catalog.load(spark, sf, name).schema  # cached path
-        assert first == second
-
-
 def test_range_bucketing_is_order_compatible(spark):
     """_range_bucketed / _grouped_range_bucketed (round 9): the bucket id
     must be monotone non-decreasing in the bucketed column within each
