@@ -13,10 +13,21 @@ Public surface:
     eng.query({"customer": {"$filter": {...}, "orders": {...}}})   # naqed-style
     eng.entity("lineitem")                                          # DataFrame
     eng.sql("select ...")                                           # SQL
+
+``Engine`` resolves lazily (PEP 562): the spec compiler is imported on
+first access, so importing the package, or registering every query with
+``registry.load_all()``, does not pay for it.
 """
 
 from naqed_spark.session import get_spark
 from naqed_spark.catalog import TABLES, load, Catalog
-from naqed_spark.compiler.engine import Engine
 
 __all__ = ["get_spark", "TABLES", "load", "Catalog", "Engine"]
+
+
+def __getattr__(name):
+    if name == "Engine":
+        from naqed_spark.compiler.engine import Engine
+
+        return Engine
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -1241,8 +1241,9 @@ def kcore_peel(spark, und, k=_KCORE_K, rounds=_KCORE_ROUNDS):
     edge) left after at most ``rounds`` peeling rounds, each of which
     drops every vertex of degree < ``k`` in the current subgraph — the
     loop behind graph_kcore, factored so hand-built graphs can drive it
-    (tests/test_graph.py). Stops early once a round changes nothing,
-    with the rows of the all-rounds spelling the oracle mirrors."""
+    (tests/test_graph.py). Stops early once a round changes nothing or
+    leaves no edge, with the rows of the all-rounds spelling the oracle
+    mirrors."""
     from naqed_spark.session import persistent_rdd_ids, trim_pins
 
     cur, m = checkpoint_observed(und, F.count(F.lit(1)).alias("n"))
@@ -1263,11 +1264,13 @@ def kcore_peel(spark, und, k=_KCORE_K, rounds=_KCORE_ROUNDS):
             F.count(F.lit(1)).alias("n"),
         )
         trim_pins(spark, base, keep=1)
-        # Stop when the edge count repeats. Exact: a round only filters
-        # the current edge set, so the new set is a subset of the old
-        # one; an equal count makes them the same set, and every later
-        # round would peel that same set to itself.
-        if m["n"] == prev:
+        # Stop when the edge count repeats or reaches 0. Exact: a round
+        # only filters the current edge set, so the new set is a subset
+        # of the old one; an equal count makes them the same set, and
+        # every later round would peel that same set to itself. An empty
+        # set peels to itself too, so a count of 0 needs no confirming
+        # round.
+        if m["n"] in (prev, 0):
             converged = True
             break
         prev = m["n"]

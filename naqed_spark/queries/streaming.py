@@ -39,7 +39,6 @@ import os
 import shutil
 import tempfile
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from naqed_spark.queries._util import dec, dsum, epoch_us, load
@@ -131,6 +130,8 @@ def _stage(spark: SparkSession, sf_dir: str) -> str:
         # key's batch oracle is empty over the same zero rows.
         _write_chunk(ev, late_dir, 0)
     else:
+        import pandas as pd
+
         cut = pd.Timestamp(lo).floor("h") + pd.Timedelta(hours=1)
         flush_ts = pd.Timestamp(hi) + pd.Timedelta(hours=2)
         _write_chunk(ev.filter(F.col("ts") >= F.lit(cut)), late_dir, 0)
@@ -431,6 +432,7 @@ def stream_stateful_count(spark, sf_dir):
     (count, cents-sum) kept in GroupState. State is hash-partitioned by
     user_id — the same single shuffle a batch groupBy needs; Arrow-batched
     pandas on both sides of the boundary."""
+    import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     base = _stage(spark, sf_dir)

@@ -13,16 +13,15 @@ Determinism: Python logic is written to be bit-identical to the SQL twin
 to regr_slope + round hedge).
 """
 
-from __future__ import annotations
-
+# No ``from __future__ import annotations`` here: the pandas UDFs' hints
+# must be real objects, evaluated where each UDF is defined, because
+# PySpark reads them through ``typing.get_type_hints`` and a string hint
+# resolves against module globals, where the builder-local ``pd`` (pandas
+# loads on the first build that needs it) is not bound.
 import re
 
-# module-level so PySpark can resolve the stringified type hints of the
-# iterator pandas UDF (PEP 563 turns annotations into strings evaluated
-# against module globals; typing.Iterator/Tuple are what its parser knows)
+# typing.Iterator/Tuple are what PySpark's pandas-UDF hint parser knows
 from typing import Iterator, Tuple  # noqa: UP035
-
-import pandas as pd
 
 from pyspark.sql import Window, functions as F
 from pyspark.sql.functions import pandas_udf, udf
@@ -64,6 +63,7 @@ def udf_python_scalar(spark, sf_dir):
 )
 def udf_pandas_vectorized(spark, sf_dir):
     import numpy as np
+    import pandas as pd
 
     @pandas_udf("double")
     def quality(n_chars: pd.Series, n_words: pd.Series) -> pd.Series:
@@ -101,6 +101,7 @@ def udf_pandas_vectorized(spark, sf_dir):
 )
 def udaf_applyinpandas(spark, sf_dir):
     import numpy as np
+    import pandas as pd
 
     def trend(pdf: pd.DataFrame) -> pd.DataFrame:
         # r17 opt (guide §4.2): the grouped-map surface calls this once
@@ -223,6 +224,8 @@ def udf_arrow_optimized(spark, sf_dir):
     """,
 )
 def udf_pandas_iterator_model(spark, sf_dir):
+    import pandas as pd
+
     @pandas_udf("double")
     def score(
         batches: Iterator[Tuple[pd.Series, pd.Series]],

@@ -122,5 +122,11 @@ def ordered_keys() -> list[str]:
 
 
 def load_all() -> None:
-    """Import every query module so registration side effects run."""
+    """Import every query module so registration side effects run.
+
+    This imports pyspark and the query modules only. pandas, pyarrow and
+    the spec compiler (``naqed_spark.compiler``) are deferred to first
+    use: the builders that need them import them in their own bodies, so
+    registering all keys and oracles does not pay for them
+    (tests/test_entry.py pins this)."""
     import naqed_spark.queries  # noqa: F401

@@ -1844,6 +1844,34 @@ def test_asof_nearest_matches_pure_python_recompute(eng):
     assert got == want and got
 
 
+@pytest.mark.quick
+def test_asof_inner_aggregate_matches_left_window_spelling(eng):
+    """The inner-$asof argmin/argmax aggregate returns exactly the
+    rows the WindowGroupLimit spelling returns: $how: left (which keeps
+    the window path) restricted to matched parents IS that spelling."""
+    from pyspark.sql import functions as F
+
+    for strategy in ("backward", "forward", "nearest"):
+        asof = {
+            "$left_on": "ts",
+            "$right_on": "o_orderdate",
+            "$per": "event_id",
+            "$tiebreak": "o_orderkey",
+            "$strategy": strategy,
+        }
+        spec = {
+            "events": {
+                "event_id": True,
+                "user_id": True,
+                "orders": {"$asof": dict(asof), "o_orderkey": True},
+            }
+        }
+        inner = sorted(map(tuple, eng.query(spec).collect()))
+        spec["events"]["orders"]["$asof"]["$how"] = "left"
+        left = eng.query(spec).filter(F.col("o_orderkey").isNotNull())
+        assert inner == sorted(map(tuple, left.collect())), strategy
+
+
 def test_asof_nearest_numeric_ordering_columns(eng):
     """The non-timestamp branch: nearest over NUMERIC ordering columns
     (event value vs order total price) ranks by raw |difference| in

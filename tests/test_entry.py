@@ -5,12 +5,17 @@ declared without being registered.
 
 Also sanity-checks the driver entry module: every registered key is
 exposed through ``queries()``, every oracle through ``oracle_sql()``, and
-the rows-only set stays the three pre-declared sketch ops.
+the rows-only set stays the three pre-declared sketch ops. Last, checks
+that registering every key leaves pandas, pyarrow and the spec compiler
+unloaded.
 """
 
 from __future__ import annotations
 
+import json
 import re
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -119,3 +124,41 @@ def test_rotation_ordering_on_synthetic_states(monkeypatch):
     assert registry.ordered_keys() == [
         never_a, never_b, old, stale, mid, inert, fresh
     ]
+
+
+_LOAD_PATH_PROBE = """
+import json, sys
+import numpy, pyspark  # preloaded, as a driver or the benchmark has them
+from naqed_spark import registry
+registry.load_all()
+deferred = [m for m in ("pandas", "pyarrow", "naqed_spark.compiler")
+            if m in sys.modules]
+import naqed_spark
+from naqed_spark import Engine
+from naqed_spark.compiler.engine import Engine as CompilerEngine
+print(json.dumps({
+    "deferred_loaded": deferred,
+    "keys": len(registry.QUERIES),
+    "oracles": len(registry.ORACLES),
+    "rows_only": len(registry.ROWS_ONLY),
+    "engine_resolves": Engine is naqed_spark.Engine is CompilerEngine,
+    "all": naqed_spark.__all__,
+}))
+"""
+
+
+def test_load_all_defers_pandas_and_the_compiler():
+    """Package load is pay-per-use: in a fresh interpreter,
+    ``load_all()`` registers every key and oracle without importing
+    pandas, pyarrow or ``naqed_spark.compiler`` (each loads on the first
+    build that needs it), and ``Engine`` still resolves on access."""
+    out = subprocess.run(
+        [sys.executable, "-c", _LOAD_PATH_PROBE],
+        cwd=REPO, capture_output=True, text=True,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["deferred_loaded"] == []
+    assert (got["keys"], got["oracles"], got["rows_only"]) == (417, 414, 3)
+    assert got["engine_resolves"]
+    assert got["all"] == ["get_spark", "TABLES", "load", "Catalog", "Engine"]

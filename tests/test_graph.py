@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from naqed_spark.queries.graph import user_edges
 from naqed_spark.registry import QUERIES, load_all
@@ -225,6 +226,28 @@ def test_kcore_converged_stop_matches_fixed_rounds(spark, tail):
     assert got == _python_kcore_peel(pairs, 2, 8)
 
 
+def test_kcore_stops_once_every_edge_is_peeled(spark, caplog):
+    """With k above every degree, round 1 peels the whole graph, and the
+    loop stops there: it runs no extra round to confirm the empty set."""
+    import logging
+
+    from naqed_spark.queries.graph import kcore_peel
+
+    pairs = _lollipop(3)
+    und = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "v long, n long"
+    )
+    with caplog.at_level(logging.DEBUG, logger="naqed_spark"):
+        got = {
+            (r["v"], r["n"]) for r in kcore_peel(spark, und, 10, 8).collect()
+        }
+    assert got == _python_kcore_peel(pairs, 10, 8) == set()
+    msgs = [r.getMessage() for r in caplog.records if r.name == "naqed_spark"]
+    assert msgs == [
+        "fixpoint loop=graph_kcore supersteps=1 cap=8 stop=converged"
+    ]
+
+
 def test_fixpoint_superstep_records(spark, caplog):
     """The stop decisions are visible: one DEBUG record per loop. The
     nation graph's direct same-region edges are already cheapest, so
@@ -247,3 +270,50 @@ def test_fixpoint_superstep_records(spark, caplog):
         " stop=converged",
         "fixpoint loop=graph_kcore supersteps=4 cap=8 stop=converged",
     ]
+
+
+@pytest.mark.quick
+def test_triangle_corners_match_wedge_join_spelling(spark):
+    """_triangle_corners (adjacency explode + one join) emits exactly the
+    corner multiset of the canonical e1⋈e2⋈e3 triangle join."""
+    from naqed_spark.queries.graph import _triangle_corners
+
+    # two triangles sharing edge (1,2), plus a dangling edge
+    edges = [(1, 2), (1, 3), (2, 3), (1, 4), (2, 4), (5, 6)]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    new = sorted(r.v for r in _triangle_corners(e).collect())
+    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+    tri = (
+        e1.join(e2, F.col("e2.src") == F.col("e1.dst"))
+        .join(
+            e3,
+            (F.col("e3.src") == F.col("e1.src"))
+            & (F.col("e3.dst") == F.col("e2.dst")),
+        )
+        .select(
+            F.col("e1.src").alias("a"),
+            F.col("e1.dst").alias("b"),
+            F.col("e2.dst").alias("c"),
+        )
+    )
+    old = sorted(
+        v
+        for r in tri.collect()
+        for v in (r.a, r.b, r.c)
+    )
+    assert new == old == sorted([1, 2, 3, 1, 2, 4])
+
+
+@pytest.mark.quick
+def test_spread_plans_round_robin_above_scan(spark):
+    """The spread() keys show a RoundRobinPartitioning exchange so the
+    per-row JSON/regex/minhash work runs cluster-wide instead of on the
+    single-split scan task."""
+    for key in ("fn_json", "fn_cast", "fn_try_safe", "fn_json_roundtrip"):
+        plan = (
+            QUERIES[key](spark, SF_DIR)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "RoundRobinPartitioning" in plan, key

@@ -1,10 +1,8 @@
-"""Focused equivalence tests for the r16 optimization-round rewrites.
-
-Each optimization that changed an operator's internals gets a test pinning
-the NEW spelling to the OLD spelling's result on a constructed input —
-bench speed must never buy a result change (round contract: every declared
-query stays hash-identical to its oracle; these tests guard the shared
-helpers the oracle sweep only exercises end-to-end).
+"""LLM-data helpers pinned against their plain spellings on constructed
+input: the MinHash band table, the n-gram candidate generator and the
+kNN fast path. The oracle sweep covers these keys end to end; each test
+here checks that the faster spelling returns exactly the rows of the
+plainer one.
 """
 
 from __future__ import annotations
@@ -24,9 +22,9 @@ load_all()
 pytestmark = pytest.mark.quick
 
 
-@pytest.fixture(scope="session")
+@pytest.fixture(scope="module")
 def spark():
-    yield tune_session(get_spark("naqed-r16-opt-tests"))
+    return tune_session(get_spark("naqed-llm-tests"))
 
 
 def test_band_buckets_match_union_spelling(spark):

@@ -109,6 +109,19 @@ def test_load_returns_same_frame_and_schema(spark):
         assert load(second, SF_DIR, name).schema == df.schema
 
 
+def test_event_id_unique_in_fixture(spark):
+    """The join_asof argmax rewrite (and the engine's $asof per-key
+    grouping) lean on event_id uniqueness — pin the entity invariant the
+    equivalence arguments cite."""
+    dup = (
+        load(spark, SF_DIR, "events")
+        .groupBy("event_id")
+        .count()
+        .filter(F.col("count") > 1)
+    )
+    assert dup.isEmpty()
+
+
 def test_direct_load_on_fresh_session_pins_utc(spark):
     """A direct ``catalog.load`` on a session that was never tuned, whose
     zone is not UTC, attaches the state and so computes under UTC: its
