@@ -1936,15 +1936,14 @@ class Engine:
         vertex id; at 100 TB edges are pre-partitioned by src and the
         tiny frontier broadcasts under AQE) + a distinct + an anti-join
         against visited, with ``localCheckpoint()`` per superstep to
-        cut lineage (the plan doubles per iteration otherwise) and
-        O(1) retained pinned state via trim_pins. Returns the root
-        entity's rows restricted to the reached set, plus the min-hop
-        depth column ``tr.alias`` (0 on seeds)."""
-        from naqed_spark.queries._util import (
-            checkpoint_observed,
-            log_supersteps,
-        )
-        from naqed_spark.session import persistent_rdd_ids, trim_pins
+        cut lineage (the plan doubles per iteration otherwise) — the
+        same ``graph.bfs_levels`` loop, run like every checkpointed
+        loop by the ``_util.fixpoint`` driver (O(1) retained pinned
+        state). Returns the root entity's rows restricted to the
+        reached set, plus the min-hop depth column ``tr.alias`` (0 on
+        seeds)."""
+        from naqed_spark.queries._util import checkpoint_observed, fixpoint
+        from naqed_spark.queries.graph import bfs_levels
 
         pk = PRIMARY_KEYS.get(entity)
         if pk is None:
@@ -2027,11 +2026,18 @@ class Engine:
             edges = sub.select(*sel).where(cond).distinct()
 
         edges = edges.persist()
+        cap = tr.max_depth if tr.max_depth is not None else 100
+        at_cap = None
+        if tr.max_depth is None:
+            at_cap = SpecError(
+                f"$traverse did not reach fixpoint within {cap}"
+                f" supersteps — the graph's diameter exceeds the safety"
+                f" cap (or, with $weight, costs keep improving — a"
+                f" negative cycle); set $max_depth to bound the search"
+                f" explicitly"
+            )
         try:
-            edges.count()  # materialize before base so trim can't sweep it
-            base = persistent_rdd_ids(self.spark)
-            cap = tr.max_depth if tr.max_depth is not None else 100
-            fixpoint = False  # stopped on an empty frontier, not the cap
+            edges.count()  # materialize before the loop's pin baseline
             if tr.weight is not None:
                 # M22 (round 14, engine-half): cheapest-path mode — frontier
                 # Bellman-Ford, the verified graph_shortest_path_weighted
@@ -2048,9 +2054,9 @@ class Engine:
                 )["w"]
                 cost_t = ("bigint" if wt in ("tinyint", "smallint", "int",
                                              "bigint") else "double")
-                best = seeds.select("v", F.lit(0).cast(cost_t).alias("__t_d"))
-                frontier = best
-                for step in range(1, cap + 1):
+
+                def relax(state, _):
+                    best, frontier = state
                     cand = (
                         frontier.join(edges, frontier.v == edges.src)
                         .select(
@@ -2072,51 +2078,29 @@ class Engine:
                     # nothing improved: the next round relaxes from an
                     # empty frontier, so best is final
                     if m["n"] == 0:
-                        fixpoint = True
-                        break
+                        return (best, improved), True
                     best = (
                         best.unionAll(improved)
                         .groupBy("v")
                         .agg(F.min("__t_d").alias("__t_d"))
                         .localCheckpoint()
                     )
-                    frontier = improved
-                    trim_pins(self.spark, base, keep=2)
-                visited = best
+                    return (best, improved), False
+
+                best = seeds.select("v", F.lit(0).cast(cost_t).alias("__t_d"))
+                visited, _ = fixpoint(
+                    self.spark, "$traverse", (best, best), relax, cap,
+                    keep=2, at_cap=at_cap,
+                )
             else:
-                visited = seeds.select("v", F.lit(0).alias("__t_d"))
-                frontier = visited
-                for step in range(1, cap + 1):
-                    nxt, m = checkpoint_observed(  # cut lineage per superstep
-                        frontier.join(edges, frontier.v == edges.src)
-                        .select(F.col("dst").alias("v"))
-                        .distinct()
-                        .join(visited.select("v"), "v", "left_anti")
-                        .select("v", F.lit(step).alias("__t_d")),
-                        F.count(F.lit(1)).alias("n"),
-                    )
-                    # an empty frontier is a fixpoint: the next round
-                    # joins nothing
-                    if m["n"] == 0:
-                        fixpoint = True
-                        break
-                    visited = visited.unionAll(nxt).localCheckpoint()
-                    frontier = nxt
-                    trim_pins(self.spark, base, keep=2)
-            log_supersteps("$traverse", step, cap, fixpoint)
+                visited = bfs_levels(
+                    self.spark, edges, seeds, cap, "$traverse", at_cap
+                ).withColumnRenamed("d", "__t_d")
         finally:
             # unpersist even when a Spark error escapes the
             # superstep loop — a leaked pinned edge set would
             # otherwise live for the session lifetime
             edges.unpersist()
-        if not fixpoint and tr.max_depth is None:
-            raise SpecError(
-                f"$traverse did not reach fixpoint within {cap}"
-                f" supersteps — the graph's diameter exceeds the safety"
-                f" cap (or, with $weight, costs keep improving — a"
-                f" negative cycle); set $max_depth to bound the search"
-                f" explicitly"
-            )
         reached = visited.withColumnRenamed("v", "__t_v")
         return (
             ent.join(reached, ent[pk] == reached["__t_v"])

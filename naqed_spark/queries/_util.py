@@ -18,11 +18,17 @@ Cross-engine hash-match conventions used by every checked query:
 from __future__ import annotations
 
 import logging
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from naqed_spark.catalog import load  # re-export for query modules
-from naqed_spark.session import session_fragment, session_state
+from naqed_spark.session import (
+    persistent_rdd_ids,
+    session_fragment,
+    session_state,
+    trim_pins,
+)
 
 __all__ = [
     "load",
@@ -34,7 +40,8 @@ __all__ = [
     "r4",
     "r6",
     "checkpoint_observed",
-    "log_supersteps",
+    "fixpoint",
+    "keep_newest_pins",
     "scoped_persist",
     "session_fragment",
     "spread",
@@ -152,10 +159,47 @@ def checkpoint_observed(
 _LOG = logging.getLogger("naqed_spark")
 
 
-def log_supersteps(loop: str, steps: int, cap: int, converged: bool) -> None:
-    """One DEBUG record per fixpoint loop (off by default): how many
-    supersteps ran against the cap, and why the loop stopped."""
+def fixpoint(spark, loop, state, step, cap, keep=1, at_cap=None):
+    """The one driver of every checkpointed fixpoint loop (Pregelix's
+    iteration driver: each algorithm supplies only its superstep). Runs
+    ``state, stopped = step(state, i)`` for supersteps ``i = 1..cap``
+    until a step reports that it stopped, and returns the last state.
+
+    Pins: the baseline is taken on entry, so a long-lived cache the
+    steps join (an edge frame) must be materialized before the call.
+    After every superstep each RDD pinned since the call is freed except
+    the ``keep`` newest (``session.trim_pins``), so retained block
+    storage is O(keep), not O(supersteps). A step therefore builds the
+    frames of its state as eager checkpoints, the newest it pins.
+
+    One DEBUG record per call (off by default): how many supersteps ran
+    against the cap, and why the loop stopped. At the cap the last state
+    is returned, or ``at_cap`` is raised when given — a loop whose answer
+    is only right at its fixpoint fails loudly rather than return it
+    unconverged."""
+    base = persistent_rdd_ids(spark)
+    i, stopped = 0, False
+    while not stopped and i < cap:
+        i += 1
+        state, stopped = step(state, i)
+        trim_pins(spark, base, keep)
     _LOG.debug(
         "fixpoint loop=%s supersteps=%d cap=%d stop=%s",
-        loop, steps, cap, "converged" if converged else "cap",
+        loop, i, cap, "converged" if stopped else "cap",
     )
+    if not stopped and at_cap is not None:
+        raise at_cap
+    return state
+
+
+@contextmanager
+def keep_newest_pins(spark, keep):
+    """Free, when the block exits, every RDD pinned inside it except the
+    ``keep`` newest — for a kernel that checkpoints partials eagerly and
+    then merges them into one eager checkpoint, whose lineage no longer
+    needs them."""
+    base = persistent_rdd_ids(spark)
+    try:
+        yield
+    finally:
+        trim_pins(spark, base, keep)

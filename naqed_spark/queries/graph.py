@@ -5,7 +5,12 @@ edges); the north star adds "GraphX/Pregel for analytics". GraphX has no
 Python API, so iterative algorithms are DataFrame-Pregel: a driver-side
 loop over declarative joins/aggregations with localCheckpoint() per
 iteration to cut lineage (SURVEY §4.3 — without it the plan doubles every
-superstep and the optimizer dies long before the data does).
+superstep and the optimizer dies long before the data does). Every
+checkpointed loop runs on the one superstep driver ``_util.fixpoint``
+(Pregelix's design): each algorithm supplies only its superstep, and the
+driver owns the pin baseline, the per-step trim to the live frames, the
+cap guard and the DEBUG superstep record. Shared loops: ``bfs_levels``,
+``bellman_ford``, ``min_labels``, ``pagerank``, ``kcore_peel``.
 
 Graphs used:
   - user-interaction graph: directed edge u→v when v emitted an event with
@@ -31,8 +36,8 @@ from naqed_spark.queries._util import (
     dec,
     dsum,
     epoch_us,
+    fixpoint,
     load,
-    log_supersteps,
     r6,
     scoped_persist,
     session_fragment,
@@ -268,21 +273,28 @@ _BFS_CAP = 10
     """,
 )
 def graph_reachability_bfs(spark, sf_dir):
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
     ue = user_edges(spark, sf_dir).persist()
-    ue.count()  # materialize the edge cache BEFORE base so trim can't sweep it
-    base = persistent_rdd_ids(spark)
-    visited = (
-        ue.sparkSession.range(1)
-        .select(F.lit(0).cast("bigint").alias("v"), F.lit(0).alias("d"))
-    )
-    frontier = visited
-    converged = False
-    for depth in range(1, _BFS_CAP + 1):
+    ue.count()  # materialize the edge cache BEFORE the loop's pin baseline
+    seed = spark.range(1).select(F.lit(0).cast("bigint").alias("v"))
+    visited = bfs_levels(spark, ue, seed, _BFS_CAP, "graph_reachability_bfs")
+    ue.unpersist()
+    return visited.select(F.col("v").alias("user_id"), F.col("d").alias("dist"))
+
+
+def bfs_levels(spark, edges, seeds, cap, loop, at_cap=None):
+    """(v, d): the min hop count ``d`` from the ``seeds`` (col v, d = 0)
+    to every vertex reachable over ``edges`` (cols src, dst) in at most
+    ``cap`` hops — the BFS behind graph_reachability_bfs and the
+    unweighted ``$traverse``. Per superstep the frontier joins the edges,
+    and the vertices not yet visited form the next frontier; an empty
+    frontier is the fixpoint. ``edges`` must be materialized before the
+    call (pin baseline); ``at_cap`` is raised if the cap stops the loop."""
+
+    def step(state, depth):
+        visited, frontier = state
         # the checkpoint cuts lineage (the plan doubles per superstep else)
         nxt, m = checkpoint_observed(
-            frontier.join(ue, frontier.v == ue.src)
+            frontier.join(edges, frontier.v == edges.src)
             .select(F.col("dst").alias("v"))
             .distinct()
             .join(visited.select("v"), "v", "left_anti")
@@ -291,16 +303,15 @@ def graph_reachability_bfs(spark, sf_dir):
         )
         # an empty frontier is a fixpoint: the next round joins nothing
         if m["n"] == 0:
-            converged = True
-            break
-        visited = visited.unionAll(nxt).localCheckpoint()
-        frontier = nxt
-        # O(1) retained state (VERDICT r6 item 7): the two newest pins
-        # are exactly {nxt, visited}; prior supersteps are folded in.
-        trim_pins(spark, base, keep=2)
-    log_supersteps("graph_reachability_bfs", depth, _BFS_CAP, converged)
-    ue.unpersist()
-    return visited.select(F.col("v").alias("user_id"), F.col("d").alias("dist"))
+            return (visited, nxt), True
+        return (visited.unionAll(nxt).localCheckpoint(), nxt), False
+
+    visited = seeds.select("v", F.lit(0).alias("d"))
+    # the two newest pins are exactly {nxt, visited}
+    visited, _ = fixpoint(
+        spark, loop, (visited, visited), step, cap, keep=2, at_cap=at_cap
+    )
+    return visited
 
 
 # nation graph: undirected same-region cliques, integer weight |n1 - n2|
@@ -359,17 +370,10 @@ def bellman_ford(spark, edges, source, rounds=_SSSP_ROUNDS):
     behind graph_shortest_path_weighted, factored so hand-built graphs
     can drive it (tests/test_graph.py). Stops early once a round changes
     nothing, with the rows of the all-rounds spelling. ``edges`` must be
-    materialized before the call (trim baseline)."""
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
+    materialized before the call (pin baseline)."""
 
-    base = persistent_rdd_ids(spark)
-    dist = spark.range(1).select(
-        F.lit(source).cast(edges.schema["src"].dataType).alias("v"),
-        F.lit(0).cast("bigint").alias("cost"),
-    )
-    prev = (1, 0)
-    converged = False
-    for step in range(1, rounds + 1):
+    def step(state, _):
+        dist, prev = state
         relaxed = (
             dist.join(edges, dist.v == edges.src)
             .select(
@@ -384,19 +388,21 @@ def bellman_ford(spark, edges, source, rounds=_SSSP_ROUNDS):
             F.count(F.lit(1)).alias("n"),
             F.sum("cost").alias("s"),
         )
-        # only the newest checkpoint (dist) is live (VERDICT r6 item 7)
-        trim_pins(spark, base, keep=1)
         # Stop when (vertex count, cost sum) repeats. Exact: each round
         # is a min over the previous dist ∪ its relaxations, so dist only
         # gains vertices and only lowers costs. An equal count means no
         # vertex was added; with every cost ≤ its previous value, an
         # equal sum means none was lowered. The round changed nothing,
         # and every later round would recompute this same frame.
-        if (m["n"], m["s"]) == prev:
-            converged = True
-            break
-        prev = (m["n"], m["s"])
-    log_supersteps("graph_shortest_path_weighted", step, rounds, converged)
+        return (dist, (m["n"], m["s"])), (m["n"], m["s"]) == prev
+
+    dist = spark.range(1).select(
+        F.lit(source).cast(edges.schema["src"].dataType).alias("v"),
+        F.lit(0).cast("bigint").alias("cost"),
+    )
+    dist, _ = fixpoint(
+        spark, "graph_shortest_path_weighted", (dist, (1, 0)), step, rounds
+    )
     return dist
 
 
@@ -418,47 +424,58 @@ def bellman_ford(spark, edges, source, rounds=_SSSP_ROUNDS):
 )
 def graph_connected_components(spark, sf_dir):
     ue = user_edges(spark, sf_dir)
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
     sym = (
         ue.select("src", "dst")
         .union(ue.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
         .persist()
     )
-    sym.count()  # materialize the cache BEFORE base so trim can't sweep it
-    base = persistent_rdd_ids(spark)
-    labels = (
-        sym.select(F.col("src").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("label"))
-    )
-    for _ in range(20):
-        # candidate label per vertex: min(own, min over in-neighbors)
-        msgs = (
-            labels.join(sym, labels.v == sym.src)
-            .select(F.col("dst").alias("v"), F.col("label"))
-        )
-        new_labels = (
-            labels.unionAll(msgs)
-            .groupBy("v")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
-        )
-        if new_labels.join(
-            labels,
-            (new_labels.v == labels.v) & (new_labels.label != labels.label),
-        ).isEmpty():
-            labels = new_labels
-            break
-        labels = new_labels
-        # the convergence join above already consumed the prior
-        # checkpoint; only the newest (labels) stays live (r6 item 7)
-        trim_pins(spark, base, keep=1)
+    sym.count()  # materialize the cache BEFORE the loop's pin baseline
+    verts = sym.select(F.col("src").alias("v")).distinct()
+    labels = min_labels(spark, verts, sym, "graph_connected_components")
     sym.unpersist()
     return labels.select(
-        F.col("v").alias("user_id"), F.col("label").alias("component")
+        F.col("v").alias("user_id"), F.col("lab").alias("component")
     )
+
+
+def min_labels(spark, verts, edges, loop, cap=20):
+    """(v, lab): the min vertex id that reaches ``v`` over ``edges`` (cols
+    src, dst; messages flow src → dst), for every vertex of ``verts``
+    (col v) — min-label propagation, the loop behind connected
+    components (symmetric edges), SCC's forward and backward reach and
+    llm_dedup_groups. One edge ⋈ label equi-join + min aggregation per
+    superstep (the aggregateMessages shape), O(1) state per vertex.
+
+    Stops on a round that lowers no label, counted in the step's own
+    checkpoint job. Exact: a label changes only where ``m < lab``, so a
+    count of 0 is a round that changed nothing. Raises at the cap — the
+    labels are only minimal at the fixpoint, and silent wrong labels are
+    worse than a loud stop. ``edges`` must be materialized before the
+    call (pin baseline)."""
+
+    def step(lab, _):
+        msgs = (
+            edges.join(lab, edges["src"] == lab["v"])
+            .groupBy(F.col("dst").alias("mv"))
+            .agg(F.min("lab").alias("m"))
+        )
+        lab, m = checkpoint_observed(
+            lab.join(msgs, lab["v"] == msgs["mv"], "left").select(
+                "v",
+                F.least("lab", "m").alias("lab"),
+                (F.col("m") < F.col("lab")).alias("lowered"),
+            ),
+            F.count_if("lowered").alias("n"),
+        )
+        return lab, m["n"] == 0
+
+    lab = verts.select("v", F.col("v").alias("lab"))
+    unconverged = RuntimeError(
+        f"{loop}: min-label propagation did not converge in {cap} supersteps"
+    )
+    lab = fixpoint(spark, loop, lab, step, cap, at_cap=unconverged)
+    return lab.select("v", "lab")
 
 
 def _pagerank_oracle() -> str:
@@ -510,50 +527,70 @@ def graph_pagerank_fixed(spark, sf_dir):
         .distinct()
     )
     verts = scoped_persist(verts)
-    n = verts.count()  # also materializes both caches BEFORE base (trim safety)
+    n = verts.count()  # also materializes both caches before the loop
     if n == 0:
         # empty edge set → no vertices, no mass to distribute (and 1/n is
         # undefined): the empty frame with the output schema IS the answer.
         ue.unpersist()
         return verts.select("v", F.lit(0.0).alias("pagerank"))
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
+    # every vertex a seed: ind = 1 and k = n, and multiplying by 1.0 is
+    # exact, so the personalized formula is the global one term by term
+    ranks = pagerank(
+        spark, ue, verts.select("v", F.lit(1.0).alias("ind")), n, 10,
+        "graph_pagerank_fixed",
+    )
+    ue.unpersist()
+    return ranks.select("v", F.col("pr").alias("pagerank"))
 
-    base = persistent_rdd_ids(spark)
+
+def pagerank(spark, ue, seeds, k, iters, loop):
+    """(v, pr) after ``iters`` PageRank iterations over the edges ``ue``
+    (cols src, dst), d=0.85, with teleport and dangling mass returned to
+    the seed vector ``ind / k`` (``seeds``: cols v, ind — every vertex,
+    ``k`` = sum of ind). Ranks are rounded to 6 decimals every iteration
+    (both engines), so cross-engine summation-order error cannot
+    compound. One frontier ⋈ edges equi-join + one hash agg per
+    superstep, plus a broadcast dangling mass. ``ue`` and ``seeds``
+    must be materialized before the call (pin baseline)."""
     outdeg = ue.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("odeg")
     )
-    ranks = verts.select("v", F.lit(1.0 / n).alias("pr"))
-    for _ in range(10):
-        contrib_df = (
+
+    def step(ranks, _):
+        inflow = (
             ranks.join(outdeg, "v")
             .join(ue, ranks.v == ue.src)
-            .select(F.col("dst").alias("v"), (F.col("pr") / F.col("odeg")).alias("c"))
+            .select(
+                F.col("dst").alias("v"),
+                (F.col("pr") / F.col("odeg")).alias("c"),
+            )
             .groupBy("v")
             .agg(F.sum("c").alias("inflow"))
         )
-        dangling = (
-            ranks.join(outdeg, "v", "left_anti").agg(
-                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("mass")
-            )
+        dangling = ranks.join(outdeg, "v", "left_anti").agg(
+            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("mass")
         )
         ranks = (
-            verts.join(contrib_df, "v", "left")
+            seeds.join(inflow, "v", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
                 "v",
                 F.round(
-                    F.lit(0.15) / n
+                    F.lit(0.15) * F.col("ind") / k
                     + F.lit(0.85)
-                    * (F.coalesce("inflow", F.lit(0.0)) + F.col("mass") / n),
+                    * (
+                        F.coalesce("inflow", F.lit(0.0))
+                        + F.col("mass") * F.col("ind") / k
+                    ),
                     6,
                 ).alias("pr"),
             )
             .localCheckpoint()
         )
-        # only the newest checkpoint (ranks) is live (VERDICT r6 item 7)
-        trim_pins(spark, base, keep=1)
-    ue.unpersist()
-    return ranks.select("v", F.col("pr").alias("pagerank"))
+        return ranks, False
+
+    ranks = seeds.select("v", (F.col("ind") / k).alias("pr"))
+    return fixpoint(spark, loop, ranks, step, iters)
 
 
 def _triangle_corners(e):
@@ -675,49 +712,6 @@ def graph_aggregate_messages(spark, sf_dir):
     )
 
 
-def _min_reach_fixpoint(verts, edges, along, spark, cap=20):
-    """Min-label propagation to fixpoint: label(u) = min vertex id that can
-    reach u along ``along`` ('fwd': messages flow src→dst; 'bwd': dst→src),
-    restricted to the given vertex/edge subgraph. One equi-join + hash agg
-    per superstep (the aggregateMessages shape), localCheckpoint per step
-    to cut lineage; raises on non-convergence (llm_dedup_groups
-    precedent — silent wrong labels are worse than a loud stop)."""
-    from naqed_spark.session import persistent_rdd_ids, unpersist_rdds
-
-    src, dst = ("src", "dst") if along == "fwd" else ("dst", "src")
-    before = persistent_rdd_ids(spark)
-    lab = verts.select("v", F.col("v").alias("lab")).localCheckpoint()
-    for _ in range(cap):
-        msgs = (
-            edges.join(lab, edges[src] == lab["v"])
-            .groupBy(F.col(dst).alias("mv"))
-            .agg(F.min("lab").alias("m"))
-        )
-        new = (
-            lab.join(msgs, lab["v"] == msgs["mv"], "left")
-            .select("v", F.least("lab", "m").alias("lab"))
-            .localCheckpoint()
-        )
-        converged = (
-            lab.select("v", F.col("lab").alias("old"))
-            .join(new, "v")
-            .filter(F.col("lab") < F.col("old"))
-            .isEmpty()
-        )
-        # O(1) retained state per superstep (VERDICT r6 item 7, llm.py
-        # blocked-kernel precedent): `new` is an EAGER checkpoint and the
-        # changed-check above fully consumed the old `lab`, so free every
-        # id this fixpoint pinned except the newest (= new's checkpoint;
-        # RDD ids are monotonic). Ids pinned by the caller stay untouched.
-        mine = persistent_rdd_ids(spark) - before
-        if mine:
-            unpersist_rdds(spark, mine - {max(mine)})
-        lab = new
-        if converged:
-            return lab
-    raise RuntimeError(f"min-reach({along}) did not converge in {cap} supersteps")
-
-
 @query(
     "graph_scc",
     # Strongly connected components of the directed user-interaction
@@ -763,58 +757,52 @@ def graph_scc(spark, sf_dir):
 def scc_labels(spark, ue):
     """(v, scc) for every vertex of the directed edge set ``ue``
     (cols src, dst) — the coloring loop behind graph_scc, factored so
-    adversarial graphs can drive it directly (tests/test_graph.py)."""
-    from naqed_spark.session import persistent_rdd_ids, unpersist_rdds
+    adversarial graphs can drive it directly (tests/test_graph.py). The
+    loop stops on a round that leaves no active vertex, counted in the
+    checkpoint job of the round's active set; an empty ``ue`` stops in
+    round 1 with an empty frame."""
 
-    base = persistent_rdd_ids(spark)
-    verts = (
-        ue.select(F.col("src").alias("v"))
-        .union(ue.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = ue
-    done = None
-    for _ in range(30):
-        if verts.isEmpty():
-            break
-        fwd = _min_reach_fixpoint(verts, edges, "fwd", spark)
-        bwd = _min_reach_fixpoint(verts, edges, "bwd", spark)
-        resolved = (
-            fwd.join(
-                bwd.select("v", F.col("lab").alias("blab")), "v"
+    def step(state, _):
+        done, verts, edges = state
+        if verts is None:  # round 1: pinned after the loop's baseline
+            verts = (
+                ue.select(F.col("src").alias("v"))
+                .union(ue.select(F.col("dst").alias("v")))
+                .distinct()
+                .localCheckpoint()
             )
+        fwd = min_labels(spark, verts, edges, "graph_scc.fwd")
+        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        bwd = min_labels(spark, verts, rev, "graph_scc.bwd")
+        resolved = (
+            fwd.join(bwd.select("v", F.col("lab").alias("blab")), "v")
             .filter(F.col("lab") == F.col("blab"))
             .select("v", F.col("lab").alias("scc"))
             .localCheckpoint()
         )
         done = resolved if done is None else done.unionAll(resolved).localCheckpoint()
-        verts = (
-            verts.join(resolved.select("v"), "v", "left_anti")
-            .localCheckpoint()
+        verts, m = checkpoint_observed(
+            verts.join(resolved.select("v"), "v", "left_anti"),
+            F.count(F.lit(1)).alias("n"),
         )
+        if m["n"] == 0:
+            return (done, verts, edges), True
         edges = (
             edges.join(verts.select(F.col("v").alias("src")), "src")
             .join(verts.select(F.col("v").alias("dst")), "dst")
             .select("src", "dst")
             .localCheckpoint()
         )
-        # O(1) retained state per outer round (VERDICT r6 item 7): all
-        # four frames above are eager checkpoints, so the prior round's
-        # done/verts/edges (and this round's fwd/bwd/resolved, already
-        # folded into them) are consumed. Ids are monotonic — the three
-        # newest pins are exactly {done, verts, edges} (round 1: done IS
-        # resolved, still among the top three); free the rest.
-        mine = persistent_rdd_ids(spark) - base
-        live = set(sorted(mine)[-3:])
-        unpersist_rdds(spark, mine - live)
-    # ADVICE r6: the old for/else raised even when round 30 resolved the
-    # last vertex (the empty-check only ran at the TOP of the next
-    # round), so re-check emptiness after the loop instead.
-    if not verts.isEmpty():
-        raise RuntimeError("graph_scc did not converge in 30 rounds")
-    if done is None:  # no edges at all -> no vertices, empty (v, scc) frame
-        return verts.select("v", F.col("v").alias("scc"))
+        return (done, verts, edges), False
+
+    # every frame above is an eager checkpoint, so this round's fwd/bwd
+    # labels and the prior round's state are consumed: the three newest
+    # pins are exactly {done, verts, edges} (round 1: done IS resolved)
+    unconverged = RuntimeError("graph_scc did not converge in 30 rounds")
+    done, _, _ = fixpoint(
+        spark, "graph_scc", (None, None, ue), step, 30, keep=3,
+        at_cap=unconverged,
+    )
     return done
 
 
@@ -1057,10 +1045,9 @@ def graph_personalized_pagerank(spark, sf_dir):
     teleport and dangling mass return to the SEED SET (user_id % 10 == 0)
     instead of the whole graph, so rank concentrates around the seeds.
     8 fixed iterations, d=0.85, per-iteration round(6) on both engines
-    (the graph_pagerank_fixed discipline). Scale shape identical to
-    global PageRank — one frontier⋈edges equi-join + one hash agg per
-    superstep, O(1) retained state via localCheckpoint + trim — plus a
-    broadcast seed vector. Zero-rank vertices are dropped at the end
+    (the graph_pagerank_fixed discipline). The same ``pagerank`` loop
+    as global PageRank, which is this one with every vertex a seed.
+    Zero-rank vertices are dropped at the end
     (at 100 TB a PPR result is seed-local: emitting the whole vertex set
     would be the scale bug)."""
     ue = user_edges(spark, sf_dir).persist()
@@ -1070,51 +1057,13 @@ def graph_personalized_pagerank(spark, sf_dir):
         .distinct()
         .persist()
     )
-    verts.count()  # materialize before trim baseline
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
-    base = persistent_rdd_ids(spark)
+    verts.count()  # materialize before the loop's pin baseline
     seeds = verts.select(
         "v",
         F.when(F.col("v") % 10 == 0, F.lit(1.0)).otherwise(0.0).alias("ind"),
     )
     k = seeds.agg(F.sum("ind")).collect()[0][0]
-    outdeg = ue.groupBy(F.col("src").alias("v")).agg(
-        F.count(F.lit(1)).alias("odeg")
-    )
-    ranks = seeds.select("v", (F.col("ind") / k).alias("pr"))
-    for _ in range(8):
-        inflow = (
-            ranks.join(outdeg, "v")
-            .join(ue, ranks.v == ue.src)
-            .select(
-                F.col("dst").alias("v"),
-                (F.col("pr") / F.col("odeg")).alias("c"),
-            )
-            .groupBy("v")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        dangling = ranks.join(outdeg, "v", "left_anti").agg(
-            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("mass")
-        )
-        ranks = (
-            seeds.join(inflow, "v", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "v",
-                F.round(
-                    F.lit(0.15) * F.col("ind") / k
-                    + F.lit(0.85)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.col("mass") * F.col("ind") / k
-                    ),
-                    6,
-                ).alias("pr"),
-            )
-            .localCheckpoint()
-        )
-        trim_pins(spark, base, keep=1)
+    ranks = pagerank(spark, ue, seeds, k, 8, "graph_personalized_pagerank")
     ue.unpersist()
     verts.unpersist()
     return ranks.filter(F.col("pr") > 0.0).select(
@@ -1222,8 +1171,8 @@ def graph_kcore(spark, sf_dir):
     whose degree in the CURRENT subgraph is < k, repeat — the standard
     community-detection / graph-cleaning primitive. Each round is one
     degree aggregate + two semi-join-shaped filters on the shrinking edge
-    set; per-round state is the live edge frame only (localCheckpoint +
-    trim, VERDICT r6 item 7 discipline). At 100 TB the edge set only
+    set; per-round state is the live edge frame only (a checkpoint the
+    ``fixpoint`` driver trims to). At 100 TB the edge set only
     shrinks, so the worst round is the first — and peeling converges in
     O(peel depth) rounds, not O(|V|)."""
     ue = user_edges(spark, sf_dir)
@@ -1244,13 +1193,9 @@ def kcore_peel(spark, und, k=_KCORE_K, rounds=_KCORE_ROUNDS):
     (tests/test_graph.py). Stops early once a round changes nothing or
     leaves no edge, with the rows of the all-rounds spelling the oracle
     mirrors."""
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
 
-    cur, m = checkpoint_observed(und, F.count(F.lit(1)).alias("n"))
-    base = persistent_rdd_ids(spark)
-    prev = m["n"]
-    converged = False
-    for step in range(1, rounds + 1):
+    def step(state, _):
+        cur, prev = state
         keep = (
             cur.groupBy("v")
             .agg(F.count(F.lit(1)).alias("d"))
@@ -1263,18 +1208,16 @@ def kcore_peel(spark, und, k=_KCORE_K, rounds=_KCORE_ROUNDS):
             .select("v", "n"),
             F.count(F.lit(1)).alias("n"),
         )
-        trim_pins(spark, base, keep=1)
         # Stop when the edge count repeats or reaches 0. Exact: a round
         # only filters the current edge set, so the new set is a subset
         # of the old one; an equal count makes them the same set, and
         # every later round would peel that same set to itself. An empty
         # set peels to itself too, so a count of 0 needs no confirming
         # round.
-        if m["n"] in (prev, 0):
-            converged = True
-            break
-        prev = m["n"]
-    log_supersteps("graph_kcore", step, rounds, converged)
+        return (cur, m["n"]), m["n"] in (prev, 0)
+
+    cur, m = checkpoint_observed(und, F.count(F.lit(1)).alias("n"))
+    cur, _ = fixpoint(spark, "graph_kcore", (cur, m["n"]), step, rounds)
     return cur
 
 
@@ -1392,25 +1335,13 @@ def graph_random_walks(spark, sf_dir):
     step is one frontier⋈edges equi-join + a WindowGroupLimit rank-1
     pick; the frontier stays one row per root, so the superstep cost is
     O(|roots| × avg-degree) and retained state is the live frontier
-    (checkpoint + trim). At 100 TB you run many walks per root by
+    (a checkpoint the ``fixpoint`` driver trims to). At 100 TB you run many walks per root by
     salting the walk id into the hash."""
     from pyspark.sql import Window
 
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
-
     ue = user_edges(spark, sf_dir).localCheckpoint()
-    base = persistent_rdd_ids(spark)
-    roots = (
-        ue.select(F.col("src").alias("v"))
-        .filter(F.col("v") % 5 == 0)
-        .distinct()
-    )
-    walk = roots.select(
-        F.col("v").alias("root"),
-        F.col("v").cast("string").alias("path"),
-        F.col("v").alias("cur"),
-    )
-    for t in range(1, _WALK_LEN + 1):
+
+    def step(walk, t):
         rank = F.md5(
             F.concat(
                 F.col("root").cast("string"),
@@ -1432,7 +1363,19 @@ def graph_random_walks(spark, sf_dir):
             )
             .localCheckpoint()
         )
-        trim_pins(spark, base, keep=1)
+        return walk, False
+
+    roots = (
+        ue.select(F.col("src").alias("v"))
+        .filter(F.col("v") % 5 == 0)
+        .distinct()
+    )
+    walk = roots.select(
+        F.col("v").alias("root"),
+        F.col("v").cast("string").alias("path"),
+        F.col("v").alias("cur"),
+    )
+    walk = fixpoint(spark, "graph_random_walks", walk, step, _WALK_LEN)
     return walk.select("root", "path")
 
 

@@ -34,6 +34,7 @@ from functools import reduce
 from pyspark.sql import Window, functions as F
 
 from naqed_spark.queries._util import (
+    keep_newest_pins,
     load,
     r6,
     scoped_persist,
@@ -567,34 +568,24 @@ def _blocked_union(spark, e, schema: str, gen_factory):
             return spark.createDataFrame([], schema)
         return e.mapInPandas(gen_factory(bc), schema=schema)
 
-    from naqed_spark.session import persistent_rdd_ids, unpersist_rdds
-
-    before = persistent_rdd_ids(spark)
-    parts = []
-    for b in range(nblocks):
-        bc = _collect_block(spark, e, int(lo) + b * width, width)
-        if bc is None:
-            continue
-        part = e.mapInPandas(gen_factory(bc), schema=schema).localCheckpoint(
-            eager=True
-        )
-        bc.destroy()
-        parts.append(part)
-    if not parts:
-        return spark.createDataFrame([], schema)
-    merged = reduce(lambda a, b: a.unionByName(b), parts).localCheckpoint(
-        eager=True
-    )
-    # Free the per-block partials now that `merged` is materialized: RDD
-    # ids are monotonic, so the newest persisted id is merged's own
-    # checkpoint — unpersist every other id this kernel pinned. (Safe
-    # ONLY because merged is eager: the partials' lineage is truncated,
-    # so freeing them while still needed would be an unrecoverable job
-    # failure. Builder-thread-local reasoning — concurrent queries on one
-    # session should skip straight to session.release_checkpoints.)
-    new_ids = persistent_rdd_ids(spark) - before
-    if new_ids:
-        unpersist_rdds(spark, new_ids - {max(new_ids)})
+    # The per-block partials are freed once `merged` is materialized:
+    # it is the newest pin, and eager, so the partials' truncated lineage
+    # is no longer needed (freeing them earlier would be an unrecoverable
+    # job failure). Builder-thread-local reasoning — concurrent queries
+    # on one session should skip straight to session.release_checkpoints.
+    with keep_newest_pins(spark, keep=1):
+        parts = []
+        for b in range(nblocks):
+            bc = _collect_block(spark, e, int(lo) + b * width, width)
+            if bc is None:
+                continue
+            part = e.mapInPandas(gen_factory(bc), schema=schema)
+            parts.append(part.localCheckpoint(eager=True))
+            bc.destroy()
+        if not parts:
+            return spark.createDataFrame([], schema)
+        merged = reduce(lambda a, b: a.unionByName(b), parts)
+        merged = merged.localCheckpoint(eager=True)
     return merged
 
 

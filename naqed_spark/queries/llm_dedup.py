@@ -125,9 +125,9 @@ def llm_dedup_groups(spark, sf_dir):
     implementation). Emits (doc_id, keep_id, n_members) for every doc that
     appears in at least one near-dup pair; dropping rows with
     doc_id != keep_id IS the dedup."""
-    pairs = llm_neardup_lsh(spark, sf_dir).select("id_a", "id_b")
-    from naqed_spark.session import persistent_rdd_ids, trim_pins
+    from naqed_spark.queries.graph import min_labels
 
+    pairs = llm_neardup_lsh(spark, sf_dir).select("id_a", "id_b")
     sym = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(
@@ -136,47 +136,14 @@ def llm_dedup_groups(spark, sf_dir):
         .distinct()
         .persist()
     )
-    sym.count()  # materialize the cache BEFORE base so trim can't sweep it
-    base = persistent_rdd_ids(spark)
-    labels = (
-        sym.select(F.col("src").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("label"))
-    )
-    converged = False
-    for _ in range(20):
-        msgs = labels.join(sym, labels.v == sym.src).select(
-            F.col("dst").alias("v"), F.col("label")
-        )
-        new_labels = (
-            labels.unionAll(msgs)
-            .groupBy("v")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
-        )
-        if new_labels.join(
-            labels,
-            (new_labels.v == labels.v) & (new_labels.label != labels.label),
-        ).isEmpty():
-            labels = new_labels
-            converged = True
-            break
-        labels = new_labels
-        # prior checkpoint consumed by the convergence join; only the
-        # newest (labels) stays live (VERDICT r6 item 7)
-        trim_pins(spark, base, keep=1)
-    if not converged:
-        # a component with diameter > 20 would otherwise return silently
-        # wrong (non-minimal) labels while the oracle computes the true
-        # transitive closure — fail loudly instead.
-        raise RuntimeError(
-            "llm_dedup_groups: min-label propagation did not converge "
-            "in 20 rounds (near-dup component diameter > 20); raise the "
-            "round cap for this corpus"
-        )
+    sym.count()  # materialize the cache BEFORE the loop's pin baseline
+    # a near-dup component of diameter > 20 raises rather than return
+    # non-minimal labels the oracle's transitive closure would not match
+    verts = sym.select(F.col("src").alias("v")).distinct()
+    labels = min_labels(spark, verts, sym, "llm_dedup_groups")
     sym.unpersist()
     comp = labels.select(
-        F.col("v").alias("doc_id"), F.col("label").alias("keep_id")
+        F.col("v").alias("doc_id"), F.col("lab").alias("keep_id")
     )
     sizes = comp.groupBy("keep_id").agg(F.count(F.lit(1)).alias("n_members"))
     return comp.join(sizes, "keep_id").select("doc_id", "keep_id", "n_members")

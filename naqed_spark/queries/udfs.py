@@ -42,8 +42,10 @@ from naqed_spark.registry import query
     """,
 )
 def udf_python_scalar(spark, sf_dir):
+    # no type hints: PySpark reads a hinted udf as a pandas/Arrow
+    # signature, and warns on every build that str -> str is not one
     @udf("string")
-    def slug(name: str) -> str:
+    def slug(name):
         return re.sub(r"[^a-z0-9]+", "-", name.lower()).strip("-")
 
     c = load(spark, sf_dir, "customer")

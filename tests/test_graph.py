@@ -248,6 +248,81 @@ def test_kcore_stops_once_every_edge_is_peeled(spark, caplog):
     ]
 
 
+def _python_min_labels(verts, edges):
+    """Reachability reference: label(v) = min vertex that reaches v along
+    the directed ``edges`` (v reaches itself)."""
+    out = {}
+    for v in verts:
+        reach, todo = {v}, [v]
+        while todo:
+            u = todo.pop()
+            for s, d in edges:
+                if s == u and d not in reach:
+                    reach.add(d)
+                    todo.append(d)
+        for w in reach:
+            out[w] = min(out.get(w, w), v)
+    return out
+
+
+def _union_find_labels(pairs):
+    """Union-find reference: label(v) = min vertex of v's undirected
+    component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def _run_min_labels(spark, edges, cap):
+    from naqed_spark.queries.graph import min_labels
+
+    e = spark.createDataFrame(edges, "src long, dst long")
+    verts = e.select(F.col("src").alias("v")).union(
+        e.select(F.col("dst").alias("v"))
+    ).distinct()
+    return {
+        r["v"]: r["lab"]
+        for r in min_labels(spark, verts, e, "test", cap).collect()
+    }
+
+
+def test_min_labels_converges_in_exactly_cap_supersteps(spark):
+    """A symmetric path of ``cap`` vertices lowers its far end's label in
+    superstep cap - 1 and confirms the fixpoint in superstep cap: the
+    labels equal the union-find components. A directed graph gets the
+    reachability reference (SCC's forward min-reach)."""
+    cap = 5
+    pairs = [(i, i + 1) for i in range(cap - 1)] + [(20, 21)]
+    sym = pairs + [(b, a) for a, b in pairs]
+    assert _run_min_labels(spark, sym, cap) == _union_find_labels(pairs)
+
+    directed = [(3, 1), (1, 2), (2, 1), (0, 4), (4, 2), (5, 3)]
+    verts = {v for e in directed for v in e}
+    assert _run_min_labels(spark, directed, cap) == _python_min_labels(
+        verts, directed
+    )
+
+
+def test_min_labels_raises_when_the_cap_stops_it(spark):
+    """One vertex more than the cap allows: the far end's label is still
+    not minimal when the cap is reached, so the loop raises instead of
+    returning it."""
+    cap = 5
+    pairs = [(i, i + 1) for i in range(cap)]
+    sym = pairs + [(b, a) for a, b in pairs]
+    with pytest.raises(RuntimeError, match="did not converge in 5"):
+        _run_min_labels(spark, sym, cap)
+
+
 def test_fixpoint_superstep_records(spark, caplog):
     """The stop decisions are visible: one DEBUG record per loop. The
     nation graph's direct same-region edges are already cheapest, so

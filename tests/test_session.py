@@ -231,6 +231,68 @@ def test_dropped_session_is_garbage_collected(spark):
         jdf.unpersist(False)
 
 
+def test_fixpoint_driver_trims_logs_and_guards_the_cap(spark, caplog):
+    """``_util.fixpoint`` on ``spark.range`` checkpoints: after every
+    superstep only the ``keep`` newest pins survive, and the live frames
+    stay readable; one DEBUG record per call; at the cap the driver
+    returns the last state, or raises what it was given."""
+    import logging
+
+    from naqed_spark.queries._util import fixpoint
+
+    def step(state, i):
+        _, newest = state
+        return (newest, spark.range(i).localCheckpoint()), i == 4
+
+    def endless(state, i):
+        return spark.range(i).localCheckpoint(), False
+
+    before = persistent_rdd_ids(spark)
+    try:
+        with caplog.at_level(logging.DEBUG, logger="naqed_spark"):
+            older, newest = fixpoint(
+                spark, "t", (None, None), step, 10, keep=2
+            )
+            assert len(persistent_rdd_ids(spark) - before) <= 2
+            assert (older.count(), newest.count()) == (3, 4)
+            assert fixpoint(spark, "t", None, endless, 3).count() == 3
+            with pytest.raises(RuntimeError, match="cap hit"):
+                fixpoint(spark, "t", None, endless, 2,
+                         at_cap=RuntimeError("cap hit"))
+        msgs = [
+            r.getMessage() for r in caplog.records if r.name == "naqed_spark"
+        ]
+        assert msgs == [
+            "fixpoint loop=t supersteps=4 cap=10 stop=converged",
+            "fixpoint loop=t supersteps=3 cap=3 stop=cap",
+            "fixpoint loop=t supersteps=2 cap=2 stop=cap",
+        ]
+    finally:
+        unpersist_rdds(spark, persistent_rdd_ids(spark) - before)
+
+
+def test_pin_sets_are_computed_only_in_session_and_util():
+    """The pin contract lives in one place: no module of the package
+    apart from ``session.py`` and ``queries/_util.py`` (the ``fixpoint``
+    driver) calls the pin primitives itself."""
+    import naqed_spark
+
+    root = Path(naqed_spark.__file__).parent
+    owners = {root / "session.py", root / "queries" / "_util.py"}
+    pin_fns = {"persistent_rdd_ids", "trim_pins", "unpersist_rdds"}
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        if path in owners:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                if name in pin_fns:
+                    calls.append((path.name, node.lineno, name))
+    assert calls == []
+
+
 def test_frame_store_is_bounded_per_sf_dir(spark):
     """The frame store is never evicted, and needs no eviction: per
     sf_dir it holds at most the ten entities plus one frame per fragment
