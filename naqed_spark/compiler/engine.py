@@ -1942,7 +1942,12 @@ class Engine:
         state). Returns the root entity's rows restricted to the
         reached set, plus the min-hop depth column ``tr.alias`` (0 on
         seeds)."""
-        from naqed_spark.queries._util import checkpoint_observed, fixpoint
+        from naqed_spark.queries._util import (
+            checkpoint_observed,
+            fixpoint,
+            pin,
+            scoped_persist,
+        )
         from naqed_spark.queries.graph import bfs_levels
 
         pk = PRIMARY_KEYS.get(entity)
@@ -2025,7 +2030,7 @@ class Engine:
                 cond = cond & F.col(tr.weight).isNotNull()
             edges = sub.select(*sel).where(cond).distinct()
 
-        edges = edges.persist()
+        edges = scoped_persist(edges)
         cap = tr.max_depth if tr.max_depth is not None else 100
         at_cap = None
         if tr.max_depth is None:
@@ -2036,71 +2041,63 @@ class Engine:
                 f" negative cycle); set $max_depth to bound the search"
                 f" explicitly"
             )
-        try:
-            edges.count()  # materialize before the loop's pin baseline
-            if tr.weight is not None:
-                # M22 (round 14, engine-half): cheapest-path mode — frontier
-                # Bellman-Ford, the verified graph_shortest_path_weighted
-                # shape with the frontier optimization: each round relaxes
-                # ONLY from vertices whose best cost improved last round
-                # (one equi-join + per-vertex min + an improvement
-                # anti-check), so a converged region stops costing joins.
-                # Integer weights stay in exact BIGINT; fractional weights
-                # run in double (per-path accumulation is left-to-right in
-                # both engines — deterministic per path; min across paths
-                # is order-free).
-                wt = dict(
-                    (f.name, f.dataType.simpleString()) for f in edges.schema
-                )["w"]
-                cost_t = ("bigint" if wt in ("tinyint", "smallint", "int",
-                                             "bigint") else "double")
+        if tr.weight is not None:
+            # M22 (round 14, engine-half): cheapest-path mode — frontier
+            # Bellman-Ford, the verified graph_shortest_path_weighted
+            # shape with the frontier optimization: each round relaxes
+            # ONLY from vertices whose best cost improved last round
+            # (one equi-join + per-vertex min + an improvement
+            # anti-check), so a converged region stops costing joins.
+            # Integer weights stay in exact BIGINT; fractional weights
+            # run in double (per-path accumulation is left-to-right in
+            # both engines — deterministic per path; min across paths
+            # is order-free).
+            wt = dict(
+                (f.name, f.dataType.simpleString()) for f in edges.schema
+            )["w"]
+            cost_t = ("bigint" if wt in ("tinyint", "smallint", "int",
+                                         "bigint") else "double")
 
-                def relax(state, _):
-                    best, frontier = state
-                    cand = (
-                        frontier.join(edges, frontier.v == edges.src)
-                        .select(
-                            F.col("dst").alias("v"),
-                            (F.col("__t_d")
-                             + F.col("w").cast(cost_t)).alias("__t_d"),
-                        )
-                        .groupBy("v")
-                        .agg(F.min("__t_d").alias("__t_d"))
+            def relax(state, _):
+                best, frontier = state
+                cand = (
+                    frontier.join(edges, frontier.v == edges.src)
+                    .select(
+                        F.col("dst").alias("v"),
+                        (F.col("__t_d")
+                         + F.col("w").cast(cost_t)).alias("__t_d"),
                     )
-                    old = best.select("v", F.col("__t_d").alias("__t_old"))
-                    improved, m = checkpoint_observed(  # cut lineage per round
-                        cand.join(old, "v", "left")
-                        .where(F.col("__t_old").isNull()
-                               | (F.col("__t_d") < F.col("__t_old")))
-                        .select("v", "__t_d"),
-                        F.count(F.lit(1)).alias("n"),
-                    )
-                    # nothing improved: the next round relaxes from an
-                    # empty frontier, so best is final
-                    if m["n"] == 0:
-                        return (best, improved), True
-                    best = (
-                        best.unionAll(improved)
-                        .groupBy("v")
-                        .agg(F.min("__t_d").alias("__t_d"))
-                        .localCheckpoint()
-                    )
-                    return (best, improved), False
-
-                best = seeds.select("v", F.lit(0).cast(cost_t).alias("__t_d"))
-                visited, _ = fixpoint(
-                    self.spark, "$traverse", (best, best), relax, cap,
-                    keep=2, at_cap=at_cap,
+                    .groupBy("v")
+                    .agg(F.min("__t_d").alias("__t_d"))
                 )
-            else:
-                visited = bfs_levels(
-                    self.spark, edges, seeds, cap, "$traverse", at_cap
-                ).withColumnRenamed("d", "__t_d")
-        finally:
-            # unpersist even when a Spark error escapes the
-            # superstep loop — a leaked pinned edge set would
-            # otherwise live for the session lifetime
-            edges.unpersist()
+                old = best.select("v", F.col("__t_d").alias("__t_old"))
+                improved, m = checkpoint_observed(  # cut lineage per round
+                    cand.join(old, "v", "left")
+                    .where(F.col("__t_old").isNull()
+                           | (F.col("__t_d") < F.col("__t_old")))
+                    .select("v", "__t_d"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                # nothing improved: the next round relaxes from an
+                # empty frontier, so best is final
+                if m["n"] == 0:
+                    return (best, improved), True
+                best = pin(
+                    best.unionAll(improved)
+                    .groupBy("v")
+                    .agg(F.min("__t_d").alias("__t_d"))
+                )
+                return (best, improved), False
+
+            best = seeds.select("v", F.lit(0).cast(cost_t).alias("__t_d"))
+            visited, _ = fixpoint(
+                self.spark, "$traverse", (best, best), relax, cap,
+                at_cap=at_cap,
+            )
+        else:
+            visited = bfs_levels(
+                self.spark, edges, seeds, cap, "$traverse", at_cap
+            ).withColumnRenamed("d", "__t_d")
         reached = visited.withColumnRenamed("v", "__t_v")
         return (
             ent.join(reached, ent[pk] == reached["__t_v"])

@@ -18,16 +18,15 @@ Cross-engine hash-match conventions used by every checked query:
 from __future__ import annotations
 
 import logging
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from naqed_spark.catalog import load  # re-export for query modules
 from naqed_spark.session import (
-    persistent_rdd_ids,
+    free_pins,
+    scoped_persist,
     session_fragment,
     session_state,
-    trim_pins,
 )
 
 __all__ = [
@@ -41,10 +40,11 @@ __all__ = [
     "r6",
     "checkpoint_observed",
     "fixpoint",
-    "keep_newest_pins",
+    "pin",
     "scoped_persist",
     "session_fragment",
     "spread",
+    "unpin",
 ]
 
 
@@ -62,24 +62,6 @@ def spread(df):
     per-row work — for plain projections the shuffle costs more than it
     buys (the r16 range-bucket persist lesson, applied to repartition)."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def scoped_persist(df):
-    """Persist ``df`` for intra-query subtree reuse; the mark is released
-    when the next registered query builds on the same session
-    (``session.begin_build``).
-
-    A lazy builder never sees the consuming action, so it cannot
-    unpersist afterwards, and a session that runs many queries (the
-    oracle sweep, a real pipeline) would otherwise accumulate every mark
-    until storage eviction and GC churn stall unrelated keys (measured:
-    417-key sweep total exec 211 s → 247 s purely from accumulation).
-    Releasing a persist mark is always safe — unlike a checkpoint, the
-    lineage recomputes — so the worst case for an unusual caller (build
-    A, build B, then run A) is a recompute, never a wrong answer."""
-    df.persist()
-    session_state(df.sparkSession).persists.append(df)
-    return df
 
 
 def sorted_pairs_expr(array_col: str, field_a: str, field_b: str) -> str:
@@ -140,66 +122,86 @@ def r6(c: Column) -> Column:
     return F.round(c, 6)
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()`` (eager), its RDD id recorded in the
+    session's pin ledger — the one place a build pins. The caller owns
+    the pin: ``fixpoint`` frees its steps' pins, anything else is freed
+    by its maker (``unpin``) or by ``release_checkpoints``."""
+    cp = df.localCheckpoint()
+    session_state(cp.sparkSession).pins.add(cp._jdf.logicalPlan().rdd().id())
+    return cp
+
+
+def held_pins(state) -> set[int]:
+    """The RDD ids of the ``LogicalRDD`` leaves of the logical plan of
+    every DataFrame in ``state`` (nested in tuples and lists)."""
+    if isinstance(state, DataFrame):
+        held = set()
+        leaves = state._jdf.logicalPlan().collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                held.add(leaf.rdd().id())
+        return held
+    if isinstance(state, (tuple, list)):
+        return set().union(*map(held_pins, state))
+    return set()
+
+
+def unpin(spark, frames) -> int:
+    """Free the session's pins that ``frames`` hold, once every frame
+    read from them is computed: a checkpoint has no lineage."""
+    return free_pins(spark, held_pins(frames))
+
+
 def checkpoint_observed(
     df: DataFrame, *metrics: Column
 ) -> tuple[DataFrame, dict]:
-    """``df.localCheckpoint()`` that also returns ``metrics`` (aggregate
-    Columns, e.g. ``F.count(F.lit(1)).alias("n")``) over the checkpointed
-    rows — the per-superstep convergence signal of a fixpoint loop at no
-    extra job. The observe node is the plan's root, above every exchange,
-    so the metrics are computed in the checkpoint's own result stage,
-    whose accumulator updates are applied exactly once; a probe such as
+    """``pin(df)`` that also returns ``metrics`` (aggregate Columns, e.g.
+    ``F.count(F.lit(1)).alias("n")``) over the checkpointed rows — the
+    per-superstep convergence signal of a fixpoint loop at no extra job.
+    The observe node is the plan's root, above every exchange, so the
+    metrics are computed in the checkpoint's own result stage, whose
+    accumulator updates are applied exactly once; a probe such as
     ``isEmpty()`` or ``count()`` after the checkpoint would be a second
     job per superstep."""
     obs = Observation()
-    cp = df.observe(obs, *metrics).localCheckpoint()
+    cp = pin(df.observe(obs, *metrics))
     return cp, obs.get
 
 
 _LOG = logging.getLogger("naqed_spark")
 
 
-def fixpoint(spark, loop, state, step, cap, keep=1, at_cap=None):
+def fixpoint(spark, loop, state, step, cap, at_cap=None):
     """The one driver of every checkpointed fixpoint loop (Pregelix's
     iteration driver: each algorithm supplies only its superstep). Runs
     ``state, stopped = step(state, i)`` for supersteps ``i = 1..cap``
     until a step reports that it stopped, and returns the last state.
 
-    Pins: the baseline is taken on entry, so a long-lived cache the
-    steps join (an edge frame) must be materialized before the call.
-    After every superstep each RDD pinned since the call is freed except
-    the ``keep`` newest (``session.trim_pins``), so retained block
-    storage is O(keep), not O(supersteps). A step therefore builds the
-    frames of its state as eager checkpoints, the newest it pins.
+    After every superstep the driver frees each pin made during this
+    call that the new state no longer holds (``held_pins``), so retained
+    block storage is the live state. Pins made before the call are the
+    caller's, so a nested loop cannot free its caller's state.
 
     One DEBUG record per call (off by default): how many supersteps ran
-    against the cap, and why the loop stopped. At the cap the last state
-    is returned, or ``at_cap`` is raised when given — a loop whose answer
-    is only right at its fixpoint fails loudly rather than return it
-    unconverged."""
-    base = persistent_rdd_ids(spark)
-    i, stopped = 0, False
+    against the cap, why the loop stopped and how many pins it freed. At
+    the cap the last state is returned, or ``at_cap`` is raised when
+    given — a loop whose answer is only right at its fixpoint fails
+    loudly rather than return it unconverged."""
+    pins = session_state(spark).pins
+    before = set(pins)
+    i, stopped, freed = 0, False, 0
     while not stopped and i < cap:
         i += 1
         state, stopped = step(state, i)
-        trim_pins(spark, base, keep)
+        made = pins - before
+        if made:
+            freed += free_pins(spark, made - held_pins(state))
     _LOG.debug(
-        "fixpoint loop=%s supersteps=%d cap=%d stop=%s",
-        loop, i, cap, "converged" if stopped else "cap",
+        "fixpoint loop=%s supersteps=%d cap=%d stop=%s pins_freed=%d",
+        loop, i, cap, "converged" if stopped else "cap", freed,
     )
     if not stopped and at_cap is not None:
         raise at_cap
     return state
-
-
-@contextmanager
-def keep_newest_pins(spark, keep):
-    """Free, when the block exits, every RDD pinned inside it except the
-    ``keep`` newest — for a kernel that checkpoints partials eagerly and
-    then merges them into one eager checkpoint, whose lineage no longer
-    needs them."""
-    base = persistent_rdd_ids(spark)
-    try:
-        yield
-    finally:
-        trim_pins(spark, base, keep)

@@ -8,9 +8,10 @@ iteration to cut lineage (SURVEY §4.3 — without it the plan doubles every
 superstep and the optimizer dies long before the data does). Every
 checkpointed loop runs on the one superstep driver ``_util.fixpoint``
 (Pregelix's design): each algorithm supplies only its superstep, and the
-driver owns the pin baseline, the per-step trim to the live frames, the
-cap guard and the DEBUG superstep record. Shared loops: ``bfs_levels``,
-``bellman_ford``, ``min_labels``, ``pagerank``, ``kcore_peel``.
+driver frees the pins its steps made once the state no longer holds
+them, guards the cap and writes the DEBUG superstep record. Shared
+loops: ``bfs_levels``, ``bellman_ford``, ``min_labels``, ``pagerank``,
+``kcore_peel``.
 
 Graphs used:
   - user-interaction graph: directed edge u→v when v emitted an event with
@@ -38,11 +39,13 @@ from naqed_spark.queries._util import (
     epoch_us,
     fixpoint,
     load,
+    pin,
     r6,
     scoped_persist,
     session_fragment,
     sorted_pairs_expr,
     spread,
+    unpin,
 )
 from naqed_spark.registry import query
 
@@ -125,11 +128,8 @@ def user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full events self-join + distinct. Persisting here lets one
     materialization feed every instance (InMemoryTableScan). The mark
     is SCOPED — released when the next registered query builds — so a
-    long session never accumulates one edge cache per graph key; keys
-    that explicitly persist/unpersist (bfs, pagerank) keep working:
-    CacheManager dedups the mark and a consumer's unpersist simply
-    lets the next build's mark re-cache it. The ev persist likewise:
-    both self-join legs consume the parsed projection."""
+    long session never accumulates one edge cache per graph key. The ev
+    persist likewise: both self-join legs consume the parsed projection."""
     ev, edges = session_fragment(
         spark,
         ("user_edges", sf_dir),
@@ -137,6 +137,25 @@ def user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scoped_persist(ev)
     return scoped_persist(edges)
+
+
+def _symmetric(ue: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b): both directions of every edge of ``ue`` (cols src, dst),
+    once — the undirected view of the directed edge set."""
+    return (
+        ue.select(F.col("src").alias(a), F.col("dst").alias(b))
+        .union(ue.select(F.col("dst").alias(a), F.col("src").alias(b)))
+        .distinct()
+    )
+
+
+def _vertices(ue: DataFrame) -> DataFrame:
+    """(v): every endpoint of the edges ``ue`` (cols src, dst), once."""
+    return (
+        ue.select(F.col("src").alias("v"))
+        .union(ue.select(F.col("dst").alias("v")))
+        .distinct()
+    )
 
 
 @query(
@@ -273,11 +292,9 @@ _BFS_CAP = 10
     """,
 )
 def graph_reachability_bfs(spark, sf_dir):
-    ue = user_edges(spark, sf_dir).persist()
-    ue.count()  # materialize the edge cache BEFORE the loop's pin baseline
+    ue = user_edges(spark, sf_dir)
     seed = spark.range(1).select(F.lit(0).cast("bigint").alias("v"))
     visited = bfs_levels(spark, ue, seed, _BFS_CAP, "graph_reachability_bfs")
-    ue.unpersist()
     return visited.select(F.col("v").alias("user_id"), F.col("d").alias("dist"))
 
 
@@ -287,8 +304,8 @@ def bfs_levels(spark, edges, seeds, cap, loop, at_cap=None):
     ``cap`` hops — the BFS behind graph_reachability_bfs and the
     unweighted ``$traverse``. Per superstep the frontier joins the edges,
     and the vertices not yet visited form the next frontier; an empty
-    frontier is the fixpoint. ``edges`` must be materialized before the
-    call (pin baseline); ``at_cap`` is raised if the cap stops the loop."""
+    frontier is the fixpoint; ``at_cap`` is raised if the cap stops the
+    loop."""
 
     def step(state, depth):
         visited, frontier = state
@@ -304,12 +321,11 @@ def bfs_levels(spark, edges, seeds, cap, loop, at_cap=None):
         # an empty frontier is a fixpoint: the next round joins nothing
         if m["n"] == 0:
             return (visited, nxt), True
-        return (visited.unionAll(nxt).localCheckpoint(), nxt), False
+        return (pin(visited.unionAll(nxt)), nxt), False
 
     visited = seeds.select("v", F.lit(0).alias("d"))
-    # the two newest pins are exactly {nxt, visited}
     visited, _ = fixpoint(
-        spark, loop, (visited, visited), step, cap, keep=2, at_cap=at_cap
+        spark, loop, (visited, visited), step, cap, at_cap=at_cap
     )
     return visited
 
@@ -357,7 +373,6 @@ def _nation_edges(spark, sf_dir):
 )
 def graph_shortest_path_weighted(spark, sf_dir):
     ne = scoped_persist(_nation_edges(spark, sf_dir))
-    ne.count()  # materialize the edge cache BEFORE base so trim can't sweep it
     return bellman_ford(spark, ne, 0).select(
         F.col("v").alias("nationkey"), F.col("cost").alias("dist")
     )
@@ -369,8 +384,7 @@ def bellman_ford(spark, edges, source, rounds=_SSSP_ROUNDS):
     integer weights, so costs are exact BIGINT) — the Bellman-Ford loop
     behind graph_shortest_path_weighted, factored so hand-built graphs
     can drive it (tests/test_graph.py). Stops early once a round changes
-    nothing, with the rows of the all-rounds spelling. ``edges`` must be
-    materialized before the call (pin baseline)."""
+    nothing, with the rows of the all-rounds spelling."""
 
     def step(state, _):
         dist, prev = state
@@ -424,16 +438,10 @@ def bellman_ford(spark, edges, source, rounds=_SSSP_ROUNDS):
 )
 def graph_connected_components(spark, sf_dir):
     ue = user_edges(spark, sf_dir)
-    sym = (
-        ue.select("src", "dst")
-        .union(ue.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    sym.count()  # materialize the cache BEFORE the loop's pin baseline
+    sym = pin(_symmetric(ue, "src", "dst"))
     verts = sym.select(F.col("src").alias("v")).distinct()
     labels = min_labels(spark, verts, sym, "graph_connected_components")
-    sym.unpersist()
+    unpin(spark, [sym])  # the labels are a checkpoint: sym is consumed
     return labels.select(
         F.col("v").alias("user_id"), F.col("lab").alias("component")
     )
@@ -451,8 +459,7 @@ def min_labels(spark, verts, edges, loop, cap=20):
     checkpoint job. Exact: a label changes only where ``m < lab``, so a
     count of 0 is a round that changed nothing. Raises at the cap — the
     labels are only minimal at the fixpoint, and silent wrong labels are
-    worse than a loud stop. ``edges`` must be materialized before the
-    call (pin baseline)."""
+    worse than a loud stop."""
 
     def step(lab, _):
         msgs = (
@@ -520,18 +527,12 @@ def graph_pagerank_fixed(spark, sf_dir):
     engines) so cross-engine summation-order error cannot compound — this is
     what lets a 10-deep iterative float computation hash-match its oracle.
     Tests additionally assert sum(pr)≈1."""
-    ue = user_edges(spark, sf_dir).persist()
-    verts = (
-        ue.select(F.col("src").alias("v"))
-        .union(ue.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    verts = scoped_persist(verts)
-    n = verts.count()  # also materializes both caches before the loop
+    ue = user_edges(spark, sf_dir)
+    verts = scoped_persist(_vertices(ue))
+    n = verts.count()
     if n == 0:
         # empty edge set → no vertices, no mass to distribute (and 1/n is
         # undefined): the empty frame with the output schema IS the answer.
-        ue.unpersist()
         return verts.select("v", F.lit(0.0).alias("pagerank"))
     # every vertex a seed: ind = 1 and k = n, and multiplying by 1.0 is
     # exact, so the personalized formula is the global one term by term
@@ -539,7 +540,6 @@ def graph_pagerank_fixed(spark, sf_dir):
         spark, ue, verts.select("v", F.lit(1.0).alias("ind")), n, 10,
         "graph_pagerank_fixed",
     )
-    ue.unpersist()
     return ranks.select("v", F.col("pr").alias("pagerank"))
 
 
@@ -550,8 +550,7 @@ def pagerank(spark, ue, seeds, k, iters, loop):
     ``k`` = sum of ind). Ranks are rounded to 6 decimals every iteration
     (both engines), so cross-engine summation-order error cannot
     compound. One frontier ⋈ edges equi-join + one hash agg per
-    superstep, plus a broadcast dangling mass. ``ue`` and ``seeds``
-    must be materialized before the call (pin baseline)."""
+    superstep, plus a broadcast dangling mass."""
     outdeg = ue.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("odeg")
     )
@@ -570,7 +569,7 @@ def pagerank(spark, ue, seeds, k, iters, loop):
         dangling = ranks.join(outdeg, "v", "left_anti").agg(
             F.coalesce(F.sum("pr"), F.lit(0.0)).alias("mass")
         )
-        ranks = (
+        ranks = pin(
             seeds.join(inflow, "v", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -585,7 +584,6 @@ def pagerank(spark, ue, seeds, k, iters, loop):
                     6,
                 ).alias("pr"),
             )
-            .localCheckpoint()
         )
         return ranks, False
 
@@ -665,11 +663,7 @@ def _triangle_corners(e):
 )
 def graph_triangle_count(spark, sf_dir):
     ue = user_edges(spark, sf_dir)
-    sym = (
-        ue.select("src", "dst")
-        .union(ue.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
+    sym = _symmetric(ue, "src", "dst")
     # r17: no edge persist — _triangle_corners consumes e exactly once
     # (the adjacency groupBy) and caches the adjacency instead.
     e = sym.filter(F.col("src") < F.col("dst"))
@@ -748,9 +742,7 @@ def graph_scc(spark, sf_dir):
     min-aggregation with O(1) state per vertex — at 100 TB edges are
     hash-partitioned by the join side and supersteps reuse that
     partitioning; no closure, nothing quadratic."""
-    ue = user_edges(spark, sf_dir).persist()
-    done = scc_labels(spark, ue)
-    ue.unpersist()
+    done = scc_labels(spark, user_edges(spark, sf_dir))
     return done.select(F.col("v").alias("user_id"), "scc")
 
 
@@ -764,44 +756,35 @@ def scc_labels(spark, ue):
 
     def step(state, _):
         done, verts, edges = state
-        if verts is None:  # round 1: pinned after the loop's baseline
-            verts = (
-                ue.select(F.col("src").alias("v"))
-                .union(ue.select(F.col("dst").alias("v")))
-                .distinct()
-                .localCheckpoint()
-            )
+        if verts is None:  # round 1: pinned in a step, so the driver frees it
+            verts = pin(_vertices(ue))
         fwd = min_labels(spark, verts, edges, "graph_scc.fwd")
         rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         bwd = min_labels(spark, verts, rev, "graph_scc.bwd")
-        resolved = (
+        resolved = pin(
             fwd.join(bwd.select("v", F.col("lab").alias("blab")), "v")
             .filter(F.col("lab") == F.col("blab"))
             .select("v", F.col("lab").alias("scc"))
-            .localCheckpoint()
         )
-        done = resolved if done is None else done.unionAll(resolved).localCheckpoint()
+        done = resolved if done is None else pin(done.unionAll(resolved))
         verts, m = checkpoint_observed(
             verts.join(resolved.select("v"), "v", "left_anti"),
             F.count(F.lit(1)).alias("n"),
         )
         if m["n"] == 0:
             return (done, verts, edges), True
-        edges = (
+        edges = pin(
             edges.join(verts.select(F.col("v").alias("src")), "src")
             .join(verts.select(F.col("v").alias("dst")), "dst")
             .select("src", "dst")
-            .localCheckpoint()
         )
         return (done, verts, edges), False
 
-    # every frame above is an eager checkpoint, so this round's fwd/bwd
-    # labels and the prior round's state are consumed: the three newest
-    # pins are exactly {done, verts, edges} (round 1: done IS resolved)
+    # every frame above is an eager checkpoint, so after a round the
+    # driver frees its fwd/bwd labels and the prior round's state
     unconverged = RuntimeError("graph_scc did not converge in 30 rounds")
     done, _, _ = fixpoint(
-        spark, "graph_scc", (None, None, ue), step, 30, keep=3,
-        at_cap=unconverged,
+        spark, "graph_scc", (None, None, ue), step, 30, at_cap=unconverged
     )
     return done
 
@@ -945,11 +928,7 @@ _UND_DEG_SQL = f"""
 )
 def graph_common_neighbors(spark, sf_dir):
     ue = user_edges(spark, sf_dir)
-    und = (
-        ue.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .union(ue.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-    )
+    und = _symmetric(ue, "v", "n")
     # und feeds the degree aggregate + both capped-adjacency legs: persist
     # (scoped — released at the next query build) so the
     # symmetrize-distinct exchange runs once (r16 opt)
@@ -1050,22 +1029,13 @@ def graph_personalized_pagerank(spark, sf_dir):
     Zero-rank vertices are dropped at the end
     (at 100 TB a PPR result is seed-local: emitting the whole vertex set
     would be the scale bug)."""
-    ue = user_edges(spark, sf_dir).persist()
-    verts = (
-        ue.select(F.col("src").alias("v"))
-        .union(ue.select(F.col("dst").alias("v")))
-        .distinct()
-        .persist()
-    )
-    verts.count()  # materialize before the loop's pin baseline
-    seeds = verts.select(
+    ue = user_edges(spark, sf_dir)
+    seeds = scoped_persist(_vertices(ue)).select(
         "v",
         F.when(F.col("v") % 10 == 0, F.lit(1.0)).otherwise(0.0).alias("ind"),
     )
     k = seeds.agg(F.sum("ind")).collect()[0][0]
     ranks = pagerank(spark, ue, seeds, k, 8, "graph_personalized_pagerank")
-    ue.unpersist()
-    verts.unpersist()
     return ranks.filter(F.col("pr") > 0.0).select(
         "v", F.col("pr").alias("ppr")
     )
@@ -1176,11 +1146,7 @@ def graph_kcore(spark, sf_dir):
     shrinks, so the worst round is the first — and peeling converges in
     O(peel depth) rounds, not O(|V|)."""
     ue = user_edges(spark, sf_dir)
-    und = (
-        ue.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .union(ue.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-    )
+    und = _symmetric(ue, "v", "n")
     cur = kcore_peel(spark, und)
     return cur.groupBy("v").agg(F.count(F.lit(1)).alias("core_degree"))
 
@@ -1196,6 +1162,9 @@ def kcore_peel(spark, und, k=_KCORE_K, rounds=_KCORE_ROUNDS):
 
     def step(state, _):
         cur, prev = state
+        if prev is None:  # round 1: pinned in a step, so the driver frees it
+            cur, m = checkpoint_observed(cur, F.count(F.lit(1)).alias("n"))
+            prev = m["n"]
         keep = (
             cur.groupBy("v")
             .agg(F.count(F.lit(1)).alias("d"))
@@ -1216,8 +1185,7 @@ def kcore_peel(spark, und, k=_KCORE_K, rounds=_KCORE_ROUNDS):
         # round.
         return (cur, m["n"]), m["n"] in (prev, 0)
 
-    cur, m = checkpoint_observed(und, F.count(F.lit(1)).alias("n"))
-    cur, _ = fixpoint(spark, "graph_kcore", (cur, m["n"]), step, rounds)
+    cur, _ = fixpoint(spark, "graph_kcore", (und, None), step, rounds)
     return cur
 
 
@@ -1260,12 +1228,7 @@ def graph_clustering_coefficient(spark, sf_dir):
     # _triangle_corners): persist so the symmetrize-distinct exchange
     # runs once (r16 opt, guide §5; r17: the wedge legs collapsed into
     # the cached adjacency, see _triangle_corners)
-    sym = (
-        ue.select("src", "dst")
-        .union(ue.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
-    sym = scoped_persist(sym)
+    sym = scoped_persist(_symmetric(ue, "src", "dst"))
     deg = sym.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -1339,7 +1302,7 @@ def graph_random_walks(spark, sf_dir):
     salting the walk id into the hash."""
     from pyspark.sql import Window
 
-    ue = user_edges(spark, sf_dir).localCheckpoint()
+    ue = pin(user_edges(spark, sf_dir))
 
     def step(walk, t):
         rank = F.md5(
@@ -1350,7 +1313,7 @@ def graph_random_walks(spark, sf_dir):
             )
         )
         w = Window.partitionBy("root").orderBy(rank, F.col("dst"))
-        walk = (
+        walk = pin(
             walk.join(ue, walk["cur"] == ue["src"])
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
@@ -1361,7 +1324,6 @@ def graph_random_walks(spark, sf_dir):
                 ).alias("path"),
                 F.col("dst").alias("cur"),
             )
-            .localCheckpoint()
         )
         return walk, False
 
@@ -1376,6 +1338,7 @@ def graph_random_walks(spark, sf_dir):
         F.col("v").alias("cur"),
     )
     walk = fixpoint(spark, "graph_random_walks", walk, step, _WALK_LEN)
+    unpin(spark, [ue])  # the walk is a checkpoint: ue is consumed
     return walk.select("root", "path")
 
 
@@ -1411,11 +1374,7 @@ def graph_random_walks(spark, sf_dir):
 )
 def graph_degree_powerlaw(spark, sf_dir):
     ue = user_edges(spark, sf_dir)
-    und = (
-        ue.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .union(ue.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-    )
+    und = _symmetric(ue, "v", "n")
     deg = und.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     hist = deg.groupBy("d").agg(F.count(F.lit(1)).alias("cnt"))
     pts = hist.select(
@@ -1560,37 +1519,30 @@ def graph_harmonic_centrality(spark, sf_dir):
     retained to the end (the final union consumes them), so retained
     state is O(hop cap) — a fixed constant, not per-superstep growth."""
     ue = user_edges(spark, sf_dir)
-    und = (
-        ue.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .union(ue.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = pin(_symmetric(ue, "v", "n"))
     seeds = und.select(F.col("v").alias("s")).filter(
         F.col("s") % 15 == 0
     ).distinct()
     layers = []
-    frontier = (
+    frontier = pin(
         seeds.join(und, seeds["s"] == und["v"])
         .filter(F.col("n") != F.col("s"))
         .select("s", F.col("n").alias("v"))
         .distinct()
-        .localCheckpoint()
     )
     layers.append(frontier)
     seen = frontier
     for _ in range(2):
-        nxt = (
+        nxt = pin(
             seen.join(und, seen["v"] == und["v"])
             .select("s", F.col("n").alias("nv"))
             .filter(F.col("nv") != F.col("s"))
             .select("s", F.col("nv").alias("v"))
             .distinct()
             .join(seen, ["s", "v"], "left_anti")
-            .localCheckpoint()
         )
         layers.append(nxt)
-        seen = seen.union(nxt).localCheckpoint()
+        seen = pin(seen.union(nxt))
     contrib = (
         layers[0].select("v", F.lit(1.0).alias("c"))
         .unionAll(layers[1].select("v", F.lit(0.5).alias("c")))
@@ -1631,11 +1583,7 @@ def graph_adamic_adar(spark, sf_dir):
     1/ln(d) factor rides the adjacency rows instead of a third join on
     the pair table."""
     ue = user_edges(spark, sf_dir)
-    und = (
-        ue.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .union(ue.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-    )
+    und = _symmetric(ue, "v", "n")
     # und feeds the degree aggregate + both capped-adjacency legs: persist
     # (scoped — released at the next query build) so the
     # symmetrize-distinct exchange runs once (r16 opt)
@@ -2022,11 +1970,7 @@ def graph_edge_support(spark, sf_dir):
     emit (their support is 0 by absence — the truss peel drops them
     first)."""
     ue = user_edges(spark, sf_dir)
-    und = (
-        ue.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .union(ue.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-    )
+    und = _symmetric(ue, "v", "n")
     # und feeds the degree aggregate + both capped-adjacency legs: persist
     # (scoped — released at the next query build) so the
     # symmetrize-distinct exchange runs once (r16 opt)

@@ -34,12 +34,13 @@ from functools import reduce
 from pyspark.sql import Window, functions as F
 
 from naqed_spark.queries._util import (
-    keep_newest_pins,
     load,
+    pin,
     r6,
     scoped_persist,
     session_fragment,
     spread,
+    unpin,
 )
 from naqed_spark.registry import query
 
@@ -493,7 +494,7 @@ def _blocked_union(spark, e, schema: str, gen_factory):
     for the query's lifetime exactly like a broadcast join build side.
 
     Multi block: exactly ONE block is live at any moment — each partial is
-    computed eagerly (``localCheckpoint``) while its block's broadcast is
+    computed eagerly (``_util.pin``) while its block's broadcast is
     current, then the broadcast is destroyed before the next block is
     collected. The partials are result-sized (top-k rows / above-threshold
     pairs), not table-sized; after the loop they are merged into ONE
@@ -568,24 +569,19 @@ def _blocked_union(spark, e, schema: str, gen_factory):
             return spark.createDataFrame([], schema)
         return e.mapInPandas(gen_factory(bc), schema=schema)
 
-    # The per-block partials are freed once `merged` is materialized:
-    # it is the newest pin, and eager, so the partials' truncated lineage
-    # is no longer needed (freeing them earlier would be an unrecoverable
-    # job failure). Builder-thread-local reasoning — concurrent queries
-    # on one session should skip straight to session.release_checkpoints.
-    with keep_newest_pins(spark, keep=1):
-        parts = []
-        for b in range(nblocks):
-            bc = _collect_block(spark, e, int(lo) + b * width, width)
-            if bc is None:
-                continue
-            part = e.mapInPandas(gen_factory(bc), schema=schema)
-            parts.append(part.localCheckpoint(eager=True))
-            bc.destroy()
-        if not parts:
-            return spark.createDataFrame([], schema)
-        merged = reduce(lambda a, b: a.unionByName(b), parts)
-        merged = merged.localCheckpoint(eager=True)
+    parts = []
+    for b in range(nblocks):
+        bc = _collect_block(spark, e, int(lo) + b * width, width)
+        if bc is None:
+            continue
+        parts.append(pin(e.mapInPandas(gen_factory(bc), schema=schema)))
+        bc.destroy()
+    if not parts:
+        return spark.createDataFrame([], schema)
+    merged = pin(reduce(lambda a, b: a.unionByName(b), parts))
+    # merged is eager, so the partials' truncated lineage is no longer
+    # needed (freeing them earlier would be an unrecoverable job failure)
+    unpin(spark, parts)
     return merged
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from naqed_spark.queries._util import load, scoped_persist, spread
+from naqed_spark.queries._util import load, pin, scoped_persist, spread, unpin
 from naqed_spark.queries.llm import _SHINGLES_SQL, _SIG_COLS_SQL, llm_neardup_lsh
 from naqed_spark.registry import query
 
@@ -128,20 +128,18 @@ def llm_dedup_groups(spark, sf_dir):
     from naqed_spark.queries.graph import min_labels
 
     pairs = llm_neardup_lsh(spark, sf_dir).select("id_a", "id_b")
-    sym = (
+    sym = pin(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
-        .persist()
     )
-    sym.count()  # materialize the cache BEFORE the loop's pin baseline
     # a near-dup component of diameter > 20 raises rather than return
     # non-minimal labels the oracle's transitive closure would not match
     verts = sym.select(F.col("src").alias("v")).distinct()
     labels = min_labels(spark, verts, sym, "llm_dedup_groups")
-    sym.unpersist()
+    unpin(spark, [sym])  # the labels are a checkpoint: sym is consumed
     comp = labels.select(
         F.col("v").alias("doc_id"), F.col("lab").alias("keep_id")
     )

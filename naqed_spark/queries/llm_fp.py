@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from naqed_spark.queries._util import (
     load,
+    pin,
     r6,
     scoped_persist,
     session_fragment,
@@ -749,22 +750,19 @@ def llm_lsh_precision_recall(spark, sf_dir):
     # recomputed the shingle+MinHash+band pipeline from scratch (the
     # shingle transform ran ~8×; measured 192 s build at sf0.1). The two
     # frames every count hangs off — the shingle sets and the candidate
-    # pairs — are persisted for the duration of the audit and freed
-    # before returning (the result is a single local row, so nothing
-    # downstream can still need them). Band table comes from the shared
-    # single-pass _band_buckets instead of a 4-way unionAll.
+    # pairs — carry scoped persist marks. Band table comes from the
+    # shared single-pass _band_buckets instead of a 4-way unionAll.
     from naqed_spark.queries.llm import _band_buckets
 
-    sh = sh.persist()
+    sh = scoped_persist(sh)
     bands = _band_buckets(sigs)
     a = bands.select(F.col("doc_id").alias("ia"), "band", "bh")
     b_ = bands.select(F.col("doc_id").alias("ib"), "band", "bh")
-    cand = (
+    cand = scoped_persist(
         a.join(b_, ["band", "bh"])
         .filter(F.col("ia") < F.col("ib"))
         .select("ia", "ib")
         .distinct()
-        .persist()
     )
     sa = sh.select(F.col("doc_id").alias("ia"), F.col("sset").alias("sa"))
     sb = sh.select(F.col("doc_id").alias("ib"), F.col("sset").alias("sb"))
@@ -784,14 +782,10 @@ def llm_lsh_precision_recall(spark, sf_dir):
     s2 = sh.select((F.col("doc_id") - 300000).alias("ia"),
                    F.col("doc_id").alias("ib"))
     planted = s1.join(s2, "ia").select("ia", "ib")
-    try:
-        n_planted = planted.count()
-        n_recalled = planted.join(cand, ["ia", "ib"], "left_semi").count()
-        n_candidates = cand.count()
-        n_precise = verified.filter(F.col("j") >= _LSH_EVAL_TAU).count()
-    finally:
-        cand.unpersist(False)
-        sh.unpersist(False)
+    n_planted = planted.count()
+    n_recalled = planted.join(cand, ["ia", "ib"], "left_semi").count()
+    n_candidates = cand.count()
+    n_precise = verified.filter(F.col("j") >= _LSH_EVAL_TAU).count()
     row = [
         (
             n_planted,
@@ -1052,7 +1046,7 @@ def llm_lsh_banding_sweep(spark, sf_dir):
             )
         ).alias("sset"),
     )
-    sigs = sh.select(
+    sigs = pin(sh.select(  # reused by all three configs — compute once
         "doc_id",
         *[
             F.array_min(
@@ -1060,7 +1054,7 @@ def llm_lsh_banding_sweep(spark, sf_dir):
             ).alias(f"sig{k}")
             for k in range(8)
         ],
-    ).localCheckpoint()  # reused by all three configs — compute once
+    ))
     # r16 opt (guide §1.2): planted pairs derive from doc_ids alone, and
     # sigs (checkpointed above) carries exactly sh's doc_ids — deriving
     # planted from sigs instead of sh stops every planted use (1 count +
@@ -1084,18 +1078,15 @@ def llm_lsh_banding_sweep(spark, sf_dir):
         bands = _band_buckets(sigs, nbands, rows)
         a = bands.select(F.col("doc_id").alias("ia"), "band", "bh")
         b_ = bands.select(F.col("doc_id").alias("ib"), "band", "bh")
-        cand = (
+        # two counts below — candidate set computed once
+        cand = scoped_persist(
             a.join(b_, ["band", "bh"])
             .filter(F.col("ia") < F.col("ib"))
             .select("ia", "ib")
             .distinct()
-            .persist()  # two counts below — candidate set computed once
         )
-        try:
-            n_cand = cand.count()
-            n_rec = planted.join(cand, ["ia", "ib"], "left_semi").count()
-        finally:
-            cand.unpersist(False)
+        n_cand = cand.count()
+        n_rec = planted.join(cand, ["ia", "ib"], "left_semi").count()
         # NULL recall when nothing is planted (DuckDB x/0 → NULL parity)
         rec = round(n_rec / n_planted, 6) if n_planted else None
         return (nbands, rows, n_cand, rec)

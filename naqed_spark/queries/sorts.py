@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from naqed_spark.queries._util import load
+from naqed_spark.queries._util import load, pin
 from naqed_spark.registry import query
 
 
@@ -63,7 +63,7 @@ def sort_multikey(spark, sf_dir):
         F.col("l_quantity").asc(),
     ]
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    part = (
+    part = pin(
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") >= 49)
         .select(
@@ -75,7 +75,6 @@ def sort_multikey(spark, sf_dir):
         )
         .repartitionByRange(nparts, *order)
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     counts = part.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
     w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)

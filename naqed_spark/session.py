@@ -13,11 +13,16 @@ deterministic across engines.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
 _UTC = ("spark.sql.session.timeZone", "UTC")
+# Sessions share the SparkContext's cache, where a plan two sessions mark
+# is one entry: marks are made and released under this lock.
+_MARKS = threading.Lock()
 
 
 def get_spark(app_name: str = "naqed-spark") -> SparkSession:
@@ -34,7 +39,7 @@ def get_spark(app_name: str = "naqed-spark") -> SparkSession:
     return tune_session(builder.getOrCreate())
 
 
-@dataclass
+@dataclass(eq=False)
 class SessionState:
     """What the package keeps per SparkSession. It is stored on the
     session object itself, so it lives and dies with that session.
@@ -49,10 +54,15 @@ class SessionState:
 
     ``persists``: the frames the current build marked with
     ``scoped_persist``, released when the next registered build on this
-    session starts (``begin_build``)."""
+    session starts (``begin_build``).
+
+    ``pins``: the pin ledger, the RDD ids of the checkpoints this
+    session's builds made (``_util.pin``), each freed by the code that
+    made it or by ``release_checkpoints`` — never by another session."""
 
     frames: dict = field(default_factory=dict)
     persists: list = field(default_factory=list)
+    pins: set = field(default_factory=set)
 
 
 def _tune(spark: SparkSession) -> None:
@@ -83,7 +93,45 @@ def session_state(spark: SparkSession) -> SessionState:
     if state is None:
         _tune(spark)
         state = spark._naqed_state = SessionState()
+        with _MARKS:
+            _live_states(spark).add(state)
     return state
+
+
+def _live_states(spark: SparkSession) -> weakref.WeakSet:
+    """The states of the live sessions on ``spark``'s SparkContext."""
+    sc = spark.sparkContext.__dict__
+    return sc.setdefault("_naqed_states", weakref.WeakSet())
+
+
+def _plan_key(df) -> int:
+    """Equal for frames whose plans share a cache entry (``sameResult``)."""
+    if not hasattr(df, "_naqed_plan_key"):
+        df._naqed_plan_key = df._jdf.queryExecution().analyzed().semanticHash()
+    return df._naqed_plan_key
+
+
+def scoped_persist(df):
+    """Persist ``df`` for intra-query subtree reuse; the mark is released
+    when the next registered query builds on the same session
+    (``begin_build``).
+
+    A lazy builder never sees the consuming action, so it cannot
+    unpersist afterwards, and a session that runs many queries (the
+    oracle sweep, a real pipeline) would otherwise accumulate every mark
+    until storage eviction and GC churn stall unrelated keys (measured:
+    417-key sweep total exec 211 s → 247 s purely from accumulation).
+    Releasing a mark is safe — unlike a checkpoint, the lineage
+    recomputes — so the worst case for an unusual caller (build A, build
+    B, then run A) is a recompute, except for a plan another live session
+    has marked: on Spark 4.1 a query planned against a cache entry that
+    another thread clears can read it as empty, so that entry stays."""
+    state = session_state(df.sparkSession)
+    _plan_key(df)
+    with _MARKS:
+        df.persist()
+        state.persists.append(df)
+    return df
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
@@ -95,14 +143,25 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _release_persists(spark: SparkSession) -> None:
+    state = session_state(spark)
+    with _MARKS:
+        held = {
+            _plan_key(df)
+            for other in _live_states(spark) if other is not state
+            for df in other.persists
+        }
+        for df in state.persists:
+            if _plan_key(df) not in held:
+                df.unpersist()
+        state.persists.clear()
+
+
 def begin_build(spark: SparkSession) -> None:
     """The step every registered query build runs first: release the
     previous build's scoped persist marks and re-pin the UTC timezone, in
     case the caller changed it since the session was tuned."""
-    persists = session_state(spark).persists
-    for df in persists:
-        df.unpersist()
-    persists.clear()
+    _release_persists(spark)
     try:
         spark.conf.set(*_UTC)
     except Exception:
@@ -123,9 +182,8 @@ def session_fragment(spark: SparkSession, key: tuple, builder):
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     """Ids of RDDs currently pinned in block storage (localCheckpoint,
-    persist). The long-session hygiene surface: query builders that must
-    eagerly checkpoint (blocked vector kernels, two-phase global rank) pin
-    result-sized frames here for as long as their result may be consumed."""
+    persist) across the whole SparkContext, every session's included —
+    what a long session retains, as the benchmark and the tests read it."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k) for k in jmap.keySet().toArray()}
 
@@ -144,26 +202,24 @@ def unpersist_rdds(spark: SparkSession, ids) -> int:
     return n
 
 
-def trim_pins(spark: SparkSession, base: set[int], keep: int) -> int:
-    """Free every pinned RDD created since ``base`` except the ``keep``
-    newest — the per-superstep hygiene call for fixpoint loops (VERDICT r6
-    item 7): each iteration's eager ``localCheckpoint`` supersedes the
-    prior one, so retained block-storage state stays O(keep) instead of
-    O(supersteps). RDD ids increase monotonically with creation, so
-    "newest" is well-defined. Caller contract: every still-live checkpoint
-    must be among the ``keep`` newest pins, and any long-lived ``persist``
-    cache (edge frames joined every round) must be materialized BEFORE
-    ``base`` is captured so it can't be swept."""
-    mine = persistent_rdd_ids(spark) - base
-    live = set(sorted(mine)[-keep:]) if keep > 0 else set()
-    return unpersist_rdds(spark, mine - live)
+def free_pins(spark: SparkSession, ids) -> int:
+    """Free the pins among ``ids`` that this session's ledger holds and
+    drop them from it; returns how many were still pinned. Ids the ledger
+    does not hold (another session's, a caller's own) are left alone."""
+    pins = session_state(spark).pins
+    mine = pins & set(ids)
+    pins -= mine
+    return unpersist_rdds(spark, mine)
 
 
 def release_checkpoints(spark: SparkSession) -> int:
-    """Drop EVERY pinned RDD — the between-queries reset for a long-lived
-    session (VERDICT r4 item 6: eager checkpoints otherwise accumulate for
-    the session's lifetime). Call only when all outstanding query results
-    have been collected/written; releasing a checkpoint a live DataFrame
-    still depends on fails that frame's next job loudly (by design — the
+    """Free this session's pins and persist marks — the between-queries
+    reset for a long-lived session (eager checkpoints otherwise
+    accumulate for the session's lifetime). Other sessions on the same
+    SparkContext keep theirs. Returns the number of checkpoint pins
+    freed. Call only when this session's outstanding query results have
+    been collected/written; releasing a checkpoint a live DataFrame still
+    depends on fails that frame's next job loudly (by design — the
     checkpoint's lineage is truncated, silent recompute is impossible)."""
-    return unpersist_rdds(spark, persistent_rdd_ids(spark))
+    _release_persists(spark)
+    return free_pins(spark, session_state(spark).pins)

@@ -125,7 +125,7 @@ def test_scc_pinned_rdds_flat_across_supersteps(spark):
 def test_fixpoint_loops_pinned_rdds_flat(spark):
     """VERDICT r6 item 7 (extended r7): ALL the per-superstep fixpoint
     loops — BFS, Bellman-Ford, CC, PageRank, dedup label propagation — now
-    trim superseded checkpoints each round (session.trim_pins), so a full
+    free superseded checkpoints each round (``_util.fixpoint``), so a full
     run leaves only the live result frames pinned, not one id per
     superstep. Each bound below is (live checkpoints + persisted inputs
     a caller may still free) with slack 1, far under the per-superstep
@@ -245,7 +245,33 @@ def test_kcore_stops_once_every_edge_is_peeled(spark, caplog):
     msgs = [r.getMessage() for r in caplog.records if r.name == "naqed_spark"]
     assert msgs == [
         "fixpoint loop=graph_kcore supersteps=1 cap=8 stop=converged"
+        " pins_freed=1"
     ]
+
+
+def test_kcore_peel_leaves_only_its_result_pinned(spark):
+    """Each call leaves one new pin, its live result: the round-1 input
+    checkpoint is made inside the loop, so the driver frees it with the
+    other superseded rounds."""
+    from naqed_spark.queries.graph import kcore_peel
+    from naqed_spark.session import free_pins, persistent_rdd_ids
+
+    pairs = _lollipop(3)
+    und = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "v long, n long"
+    )
+    before = persistent_rdd_ids(spark)
+    try:
+        results, new_pins = [], []
+        for _ in range(3):
+            results.append(kcore_peel(spark, und, 2, 8))
+            new_pins.append(len(persistent_rdd_ids(spark) - before))
+        assert new_pins == [1, 2, 3]
+        want = _python_kcore_peel(pairs, 2, 8)
+        for df in results:
+            assert {(r["v"], r["n"]) for r in df.collect()} == want
+    finally:
+        free_pins(spark, persistent_rdd_ids(spark) - before)
 
 
 def _python_min_labels(verts, edges):
@@ -342,8 +368,9 @@ def test_fixpoint_superstep_records(spark, caplog):
     msgs = [r.getMessage() for r in caplog.records if r.name == "naqed_spark"]
     assert msgs == [
         "fixpoint loop=graph_shortest_path_weighted supersteps=2 cap=6"
-        " stop=converged",
-        "fixpoint loop=graph_kcore supersteps=4 cap=8 stop=converged",
+        " stop=converged pins_freed=1",
+        "fixpoint loop=graph_kcore supersteps=4 cap=8 stop=converged"
+        " pins_freed=4",
     ]
 
 

@@ -1,6 +1,6 @@
 """The per-session state (``session.SessionState``): tuning, the frame
-store behind ``catalog.load`` and ``session_fragment``, and the scoped
-persist marks that each registered build releases.
+store behind ``catalog.load`` and ``session_fragment``, the scoped
+persist marks that each registered build releases, and the pin ledger.
 
 Sessions made with ``spark.newSession()`` share the SparkContext but start
 without state, so each test that needs an untouched session makes one.
@@ -11,7 +11,9 @@ from __future__ import annotations
 import ast
 import gc
 import os
+import sys
 import weakref
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pytest
@@ -19,11 +21,14 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from naqed_spark.catalog import TABLES, load
+from naqed_spark.queries._util import scoped_persist
 from naqed_spark.registry import QUERIES, load_all
 from naqed_spark.session import (
     begin_build,
+    free_pins,
     get_spark,
     persistent_rdd_ids,
+    release_checkpoints,
     session_state,
     tune_session,
     unpersist_rdds,
@@ -232,29 +237,33 @@ def test_dropped_session_is_garbage_collected(spark):
 
 
 def test_fixpoint_driver_trims_logs_and_guards_the_cap(spark, caplog):
-    """``_util.fixpoint`` on ``spark.range`` checkpoints: after every
-    superstep only the ``keep`` newest pins survive, and the live frames
-    stay readable; one DEBUG record per call; at the cap the driver
-    returns the last state, or raises what it was given."""
+    """``_util.fixpoint`` on ``spark.range`` pins: after every superstep
+    the driver frees the pins its steps made that the state no longer
+    holds, so the live frames stay pinned and readable, and a pin made
+    before the call stays the caller's; one DEBUG record per call, with
+    the pins it freed; at the cap the driver returns the last state, or
+    raises what it was given."""
     import logging
 
-    from naqed_spark.queries._util import fixpoint
+    from naqed_spark.queries._util import fixpoint, held_pins, pin
 
     def step(state, i):
         _, newest = state
-        return (newest, spark.range(i).localCheckpoint()), i == 4
+        return (newest, pin(spark.range(i))), i == 4
 
     def endless(state, i):
-        return spark.range(i).localCheckpoint(), False
+        return pin(spark.range(i)), False
 
     before = persistent_rdd_ids(spark)
     try:
+        caller = pin(spark.range(9))
         with caplog.at_level(logging.DEBUG, logger="naqed_spark"):
-            older, newest = fixpoint(
-                spark, "t", (None, None), step, 10, keep=2
-            )
-            assert len(persistent_rdd_ids(spark) - before) <= 2
+            older, newest = fixpoint(spark, "t", (None, None), step, 10)
+            live = held_pins((caller, older, newest))
+            assert len(live) == 3
+            assert persistent_rdd_ids(spark) - before == live
             assert (older.count(), newest.count()) == (3, 4)
+            assert caller.count() == 9
             assert fixpoint(spark, "t", None, endless, 3).count() == 3
             with pytest.raises(RuntimeError, match="cap hit"):
                 fixpoint(spark, "t", None, endless, 2,
@@ -263,23 +272,26 @@ def test_fixpoint_driver_trims_logs_and_guards_the_cap(spark, caplog):
             r.getMessage() for r in caplog.records if r.name == "naqed_spark"
         ]
         assert msgs == [
-            "fixpoint loop=t supersteps=4 cap=10 stop=converged",
-            "fixpoint loop=t supersteps=3 cap=3 stop=cap",
-            "fixpoint loop=t supersteps=2 cap=2 stop=cap",
+            "fixpoint loop=t supersteps=4 cap=10 stop=converged pins_freed=2",
+            "fixpoint loop=t supersteps=3 cap=3 stop=cap pins_freed=2",
+            "fixpoint loop=t supersteps=2 cap=2 stop=cap pins_freed=1",
         ]
     finally:
-        unpersist_rdds(spark, persistent_rdd_ids(spark) - before)
+        free_pins(spark, persistent_rdd_ids(spark) - before)
 
 
 def test_pin_sets_are_computed_only_in_session_and_util():
     """The pin contract lives in one place: no module of the package
-    apart from ``session.py`` and ``queries/_util.py`` (the ``fixpoint``
-    driver) calls the pin primitives itself."""
+    apart from ``session.py`` and ``queries/_util.py`` (``pin``, the
+    ``fixpoint`` driver) makes a checkpoint or calls the pin primitives
+    itself, so every pin is in its session's ledger."""
     import naqed_spark
 
     root = Path(naqed_spark.__file__).parent
     owners = {root / "session.py", root / "queries" / "_util.py"}
-    pin_fns = {"persistent_rdd_ids", "trim_pins", "unpersist_rdds"}
+    pin_fns = {
+        "localCheckpoint", "persistent_rdd_ids", "unpersist_rdds", "free_pins",
+    }
     calls = []
     for path in sorted(root.rglob("*.py")):
         if path in owners:
@@ -291,6 +303,70 @@ def test_pin_sets_are_computed_only_in_session_and_util():
                 if name in pin_fns:
                     calls.append((path.name, node.lineno, name))
     assert calls == []
+
+
+def test_sessions_on_two_threads_keep_their_own_pins(spark):
+    """Two threads, each on its own ``newSession()`` of the shared
+    SparkContext, run two checkpointing fixpoint keys twice each, with
+    the between-queries reset after every run: each result equals a
+    serial run's, because a loop and ``release_checkpoints`` free only
+    their own session's pins. Releasing one session's checkpoints leaves
+    another session's pins, and the result that reads them, in place."""
+    keys = ("graph_connected_components", "graph_kcore")
+
+    def run(session, key):
+        rows = sorted(QUERIES[key](session, SF_DIR).collect())
+        release_checkpoints(session)
+        return key, rows
+
+    want = dict(run(spark.newSession(), k) for k in keys)
+
+    def worker(_):
+        session = spark.newSession()
+        return [run(session, k) for _ in range(2) for k in keys]
+
+    with ThreadPoolExecutor(2) as pool:
+        got = [r for rs in pool.map(worker, range(2), timeout=300) for r in rs]
+    assert len(got) == 8
+    for key, rows in got:
+        assert rows == want[key], key
+
+    a, b = spark.newSession(), spark.newSession()
+    QUERIES["graph_kcore"](a, SF_DIR)
+    kept = QUERIES["graph_kcore"](b, SF_DIR)
+    held = set(session_state(b).pins)
+    assert held and not held & session_state(a).pins
+    assert release_checkpoints(a) >= 1
+    assert held <= persistent_rdd_ids(spark)
+    assert sorted(kept.collect()) == want["graph_kcore"]
+    assert release_checkpoints(b) == len(held)
+    assert not held & persistent_rdd_ids(spark)
+
+
+def test_scoped_marks_survive_other_sessions_releases(spark):
+    """One plan marked by several sessions is one cache entry: while a
+    session holds its mark, another session's release never drops the
+    entry. More threads than cores, with a short switch interval, each
+    marking and releasing the same plan on its own session."""
+    threads = os.cpu_count() + 2
+
+    def worker(_):
+        session = spark.newSession()
+        dropped = 0
+        for _ in range(25):
+            df = scoped_persist(session.range(7).selectExpr("id * 3 AS x"))
+            dropped += df.storageLevel == StorageLevel.NONE
+            begin_build(session)
+        return dropped
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(threads) as pool:
+            dropped = list(pool.map(worker, range(threads), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert dropped == [0] * threads
 
 
 def test_frame_store_is_bounded_per_sf_dir(spark):
