@@ -24,7 +24,15 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from naqed_spark.queries._util import dec, dsum, load, r4, r6, scoped_persist
+from naqed_spark.queries._util import (
+    dsum,
+    exact_sum,
+    lanes,
+    load,
+    r4,
+    r6,
+    scoped_persist,
+)
 from naqed_spark.registry import query
 
 
@@ -44,8 +52,8 @@ from naqed_spark.registry import query
     """,
 )
 def agg_global(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    sum_price = dsum(dec("l_extendedprice"))
+    li, (price,) = lanes(load(spark, sf_dir, "lineitem"), "l_extendedprice")
+    sum_price = dsum(price)
     return li.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("l_quantity").alias("sum_qty"),
@@ -84,12 +92,14 @@ def agg_global(spark, sf_dir):
     """,
 )
 def agg_groupby_hash(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp_ntz")
+    li, (price, disc, tax) = lanes(
+        load(spark, sf_dir, "lineitem").filter(
+            F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp_ntz")
+        ),
+        "l_extendedprice",
+        ("l_discount", "decimal(4,2)"),
+        ("l_tax", "decimal(4,2)"),
     )
-    price = dec("l_extendedprice")
-    disc = dec("l_discount", "decimal(4,2)")
-    tax = dec("l_tax", "decimal(4,2)")
     n = F.count(F.lit(1))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum("l_quantity").alias("sum_qty"),
@@ -147,12 +157,12 @@ def agg_approx_count_distinct(spark, sf_dir):
     """,
 )
 def agg_having(spark, sf_dir):
+    c, (bal,) = lanes(load(spark, sf_dir, "customer"), "c_acctbal")
     return (
-        load(spark, sf_dir, "customer")
-        .groupBy("c_nationkey")
+        c.groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("n_cust"),
-            dsum(dec("c_acctbal")).alias("total_bal"),
+            dsum(bal).alias("total_bal"),
         )
         .filter(F.col("n_cust") > 50)
     )
@@ -213,12 +223,12 @@ def agg_rollup(spark, sf_dir):
     """,
 )
 def agg_cube(spark, sf_dir):
+    o, (price,) = lanes(load(spark, sf_dir, "orders"), "o_totalprice")
     return (
-        load(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
+        o.cube("o_orderstatus", "o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            dsum(dec("o_totalprice")).alias("total"),
+            dsum(price).alias("total"),
         )
     )
 
@@ -612,16 +622,13 @@ def agg_approx_percentile_sketch(spark, sf_dir):
     """,
 )
 def agg_conditional_ratio(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    price = dec("l_extendedprice")
-    is_disc = F.col("l_discount") > 0.05
-    disc_price = F.when(is_disc, price).otherwise(
-        F.lit(0).cast("decimal(12,2)")
-    )
+    li, (price,) = lanes(load(spark, sf_dir, "lineitem"), "l_extendedprice")
+    is_disc = "l_discount > 0.05"
+    disc_price = price.where(is_disc, otherwise=0)
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.count_if(is_disc).alias("n_disc"),
-        r6(F.count_if(is_disc).cast("double") / F.count(F.lit(1))).alias(
+        F.count_if(F.expr(is_disc)).alias("n_disc"),
+        r6(F.count_if(F.expr(is_disc)).cast("double") / F.count(F.lit(1))).alias(
             "disc_row_share"
         ),
         dsum(price).alias("rev_total"),
@@ -681,7 +688,7 @@ def agg_bitmap_distinct(spark, sf_dir):
     """,
 )
 def agg_grouping_id(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
+    li, (qty,) = lanes(load(spark, sf_dir, "lineitem"), "l_quantity")
     return (
         li.groupingSets(
             [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
@@ -692,7 +699,7 @@ def agg_grouping_id(spark, sf_dir):
             F.grouping("l_returnflag").cast("int").alias("g_flag"),
             F.grouping("l_linestatus").cast("int").alias("g_status"),
             F.count(F.lit(1)).alias("n"),
-            dsum(dec("l_quantity")).alias("qty"),
+            dsum(qty).alias("qty"),
         )
     )
 
@@ -947,9 +954,9 @@ def agg_count_distinct_multi(spark, sf_dir):
     """,
 )
 def agg_percent_of_total(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
+    li, (price,) = lanes(load(spark, sf_dir, "lineitem"), "l_extendedprice")
     cell = li.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum(dec("l_extendedprice")).alias("rev")
+        dsum(price).alias("rev")
     )
     flag = cell.groupBy("l_returnflag").agg(
         F.sum("rev").cast("double").alias("flag_rev")
@@ -1201,16 +1208,17 @@ def agg_gini_concentration(spark, sf_dir):
     — identical integers, so every i·spend term matches the single-
     window spelling exactly. Spend aggregation itself is the usual
     map-side-partial hash agg on the customer key."""
-    s = (
-        load(spark, sf_dir, "orders")
-        .join(
+    oc, (price,) = lanes(
+        load(spark, sf_dir, "orders").join(
             load(spark, sf_dir, "customer").select(
                 "c_custkey", "c_mktsegment"
             ),
             F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .groupBy("c_mktsegment", "o_custkey")
-        .agg(F.sum(dec("o_totalprice")).alias("spend"))
+        ),
+        "o_totalprice",
+    )
+    s = oc.groupBy("c_mktsegment", "o_custkey").agg(
+        exact_sum(price).alias("spend")
     )
     b = _grouped_range_bucketed(
         s.withColumn("spend_d", F.col("spend").cast("double")),
@@ -2064,13 +2072,14 @@ def agg_abc_classification(spark, sf_dir):
     # r16 opt (guide §5): r feeds the grand-total aggregate AND the
     # bucketing pass — persist so the lineitem scan + per-part groupBy
     # runs once (the persisted frame is per-part, result-bounded).
+    li, (price, disc) = lanes(
+        load(spark, sf_dir, "lineitem"),
+        "l_extendedprice",
+        ("l_discount", "decimal(4,2)"),
+    )
     r = scoped_persist(
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_partkey")
-        .agg(
-            F.sum(
-                dec("l_extendedprice") * (1 - dec("l_discount", "decimal(4,2)"))
-            ).alias("rev_dec")
+        li.groupBy("l_partkey").agg(
+            exact_sum(price * (1 - disc)).alias("rev_dec")
         )
     )
     t = r.agg(F.sum("rev_dec").cast("double").alias("total"))

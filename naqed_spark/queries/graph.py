@@ -34,10 +34,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from naqed_spark.queries._util import (
     checkpoint_observed,
-    dec,
     dsum,
     epoch_us,
+    exact_sum,
     fixpoint,
+    lanes,
     load,
     pin,
     r6,
@@ -237,14 +238,14 @@ def graph_2hop(spark, sf_dir):
     r = load(spark, sf_dir, "region")
     n = load(spark, sf_dir, "nation")
     c = load(spark, sf_dir, "customer")
-    return (
+    j, (bal,) = lanes(
         r.join(F.broadcast(n), n.n_regionkey == r.r_regionkey)
-        .join(c, c.c_nationkey == n.n_nationkey)
-        .groupBy("r_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            dsum(dec("c_acctbal")).alias("total_bal"),
-        )
+        .join(c, c.c_nationkey == n.n_nationkey),
+        "c_acctbal",
+    )
+    return j.groupBy("r_name").agg(
+        F.count(F.lit(1)).alias("n_customers"),
+        dsum(bal).alias("total_bal"),
     )
 
 
@@ -691,8 +692,8 @@ def graph_triangle_count(spark, sf_dir):
 )
 def graph_aggregate_messages(spark, sf_dir):
     ue = user_edges(spark, sf_dir)
-    ev = load(spark, sf_dir, "events")
-    vmap = ev.groupBy("user_id").agg(F.sum(dec("value")).alias("val"))
+    ev, (value,) = lanes(load(spark, sf_dir, "events"), "value")
+    vmap = ev.groupBy("user_id").agg(exact_sum(value).alias("val"))
     return (
         ue.join(vmap, vmap.user_id == ue.src)
         .groupBy(F.col("dst"))
@@ -1515,25 +1516,24 @@ def graph_harmonic_centrality(spark, sf_dir):
     is the standard estimator (contributions are exact small rationals:
     1, 1/2, 1/3 — identical doubles both engines, round(6) on the sum).
     Each layer is one frontier⋈edges equi-join + an anti-join against
-    the seen set — the BFS superstep shape. All three layer frames are
-    retained to the end (the final union consumes them), so retained
-    state is O(hop cap) — a fixed constant, not per-superstep growth."""
+    the seen set — the BFS superstep shape. Only the three layer frames
+    stay pinned (the final union consumes them): the edge set and the
+    seen set are freed once the last layer is pinned, so retained state
+    is O(hop cap) — a fixed constant, not per-superstep growth."""
     ue = user_edges(spark, sf_dir)
     und = pin(_symmetric(ue, "v", "n"))
     seeds = und.select(F.col("v").alias("s")).filter(
         F.col("s") % 15 == 0
     ).distinct()
-    layers = []
     frontier = pin(
         seeds.join(und, seeds["s"] == und["v"])
         .filter(F.col("n") != F.col("s"))
         .select("s", F.col("n").alias("v"))
         .distinct()
     )
-    layers.append(frontier)
-    seen = frontier
-    for _ in range(2):
-        nxt = pin(
+
+    def hop(seen):
+        return pin(
             seen.join(und, seen["v"] == und["v"])
             .select("s", F.col("n").alias("nv"))
             .filter(F.col("nv") != F.col("s"))
@@ -1541,8 +1541,11 @@ def graph_harmonic_centrality(spark, sf_dir):
             .distinct()
             .join(seen, ["s", "v"], "left_anti")
         )
-        layers.append(nxt)
-        seen = pin(seen.union(nxt))
+
+    second = hop(frontier)
+    seen = pin(frontier.union(second))
+    layers = [frontier, second, hop(seen)]
+    unpin(spark, [und, seen])
     contrib = (
         layers[0].select("v", F.lit(1.0).alias("c"))
         .unionAll(layers[1].select("v", F.lit(0.5).alias("c")))

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from naqed_spark.queries._util import dec, dsum, epoch_us, load
+from naqed_spark.queries._util import dsum, epoch_us, lanes, load
 from naqed_spark.registry import query
 
 
@@ -163,13 +163,16 @@ def join_theta_range(spark, sf_dir):
         )
     )
     o = load(spark, sf_dir, "orders")
-    joined = o.join(
-        F.broadcast(bands),
-        (o.o_totalprice >= bands.lo) & (o.o_totalprice < bands.hi),
+    joined, (price,) = lanes(
+        o.join(
+            F.broadcast(bands),
+            (o.o_totalprice >= bands.lo) & (o.o_totalprice < bands.hi),
+        ),
+        "o_totalprice",
     )
     return joined.groupBy("band").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        dsum(dec("o_totalprice")).alias("band_total"),
+        dsum(price).alias("band_total"),
     )
 
 
@@ -340,8 +343,7 @@ def join_multiway_star(spark, sf_dir):
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    revenue = dec("l_extendedprice") * (1 - dec("l_discount", "decimal(4,2)"))
-    return (
+    star, (price, disc) = lanes(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(
@@ -349,9 +351,12 @@ def join_multiway_star(spark, sf_dir):
             (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
         )
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(dsum(revenue).alias("revenue"))
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey),
+        "l_extendedprice",
+        ("l_discount", "decimal(4,2)"),
+    )
+    return star.groupBy("n_name").agg(
+        dsum(price * (1 - disc)).alias("revenue")
     )
 
 
@@ -422,21 +427,20 @@ def join_q3_shipping_priority(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1996-07-01").cast("timestamp_ntz")
     )
-    return (
+    j, (price, disc) = lanes(
         c.join(o, c["c_custkey"] == o["o_custkey"])
-        .join(li, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
+        .join(li, li["l_orderkey"] == o["o_orderkey"]),
+        "l_extendedprice",
+        ("l_discount", "decimal(4,2)"),
+    )
+    return (
+        j.groupBy(
             "o_orderkey",
             F.date_format(F.col("o_orderdate").cast("date"), "yyyy-MM-dd")
             .alias("o_orderdate_s"),
             "o_orderpriority",
         )
-        .agg(
-            dsum(
-                dec("l_extendedprice")
-                * (1 - dec("l_discount", "decimal(4,2)"))
-            ).alias("revenue")
-        )
+        .agg(dsum(price * (1 - disc)).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
         .limit(10)
     )
@@ -623,13 +627,11 @@ def join_runtime_bloom_filter(spark, sf_dir):
     for k, v in keys.items():
         conf.set(k, v)
     try:
-        out = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("l_orderkey")
-            .agg(
-                F.count(F.lit(1)).alias("n_lines"),
-                dsum(dec("l_quantity")).alias("qty"),
-            )
+        j, (qty,) = lanes(li.join(o, li.l_orderkey == o.o_orderkey),
+                          "l_quantity")
+        out = j.groupBy("l_orderkey").agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            dsum(qty).alias("qty"),
         )
         # force physical planning NOW, inside the scaled-threshold window;
         # the Dataset caches this QueryExecution for later actions

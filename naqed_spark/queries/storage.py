@@ -11,7 +11,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from naqed_spark.queries._util import dec, dsum, load
+from naqed_spark.queries._util import dsum, lanes, load
 from naqed_spark.registry import query
 
 
@@ -79,11 +79,9 @@ def join_bucketed_colocated(spark, sf_dir):
         )
     o = spark.table("naqed_bkt_orders").filter(F.col("o_orderstatus") == "F")
     li = spark.table("naqed_bkt_lineitem")
-    return (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy("o_orderkey", "o_custkey")
-        .agg(dsum(dec("l_quantity")).alias("qty"))
-    )
+    j, (qty,) = lanes(o.join(li, o["o_orderkey"] == li["l_orderkey"]),
+                      "l_quantity")
+    return j.groupBy("o_orderkey", "o_custkey").agg(dsum(qty).alias("qty"))
 
 
 @query(

@@ -21,15 +21,17 @@ ORDER BY + LIMIT (TakeOrderedAndProject — per-partition heaps, no full
 sort); scalar subqueries become single-row broadcast cross-joins, never
 ``collect()``.
 
-Determinism follows _util's conventions: exact DECIMAL sums cast to
-double at the end, dates as ISO strings, ratio outputs rounded to 6.
+Determinism follows _util's conventions: exact sums in integer lanes
+cast to double at the end, dates as ISO strings, ratio outputs rounded to 6.
 """
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import functions as F
 
-from naqed_spark.queries._util import date_str, dec, dsum, load, r6
+from naqed_spark.queries._util import date_str, dsum, exact_sum, lanes, load, r6
 from naqed_spark.registry import query
 
 # Exact-decimal per-row revenue: both engines compute the identical
@@ -37,8 +39,13 @@ from naqed_spark.registry import query
 _REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"
 
 
-def _rev() -> F.Column:
-    return dec("l_extendedprice") * (1 - dec("l_discount", "decimal(4,2)"))
+def _rev(df):
+    """``df`` with its price and discount lanes, and the revenue lane
+    ``_REV`` over them."""
+    df, (price, disc) = lanes(
+        df, "l_extendedprice", ("l_discount", "decimal(4,2)")
+    )
+    return df, price * (1 - disc)
 
 
 def _ts(s: str) -> F.Column:
@@ -203,20 +210,17 @@ def tpch_q6_revenue_change(spark, sf_dir):
     """All three predicates are scan-pushable (PushedFilters), the read
     schema is 4 columns, and the aggregate is map-side partial — at 100 TB
     this is bandwidth-bound, exactly as it should be."""
-    return (
-        load(spark, sf_dir, "lineitem")
-        .filter(
+    li, (price, disc) = lanes(
+        load(spark, sf_dir, "lineitem").filter(
             (F.col("l_shipdate") >= _ts("1997-01-01"))
             & (F.col("l_shipdate") < _ts("1998-01-01"))
             & (F.col("l_discount").between(0.05, 0.07))
             & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            dsum(
-                dec("l_extendedprice") * dec("l_discount", "decimal(4,2)")
-            ).alias("revenue")
-        )
+        ),
+        "l_extendedprice",
+        ("l_discount", "decimal(4,2)"),
     )
+    return li.agg(dsum(price * disc).alias("revenue"))
 
 
 @query(
@@ -258,7 +262,7 @@ def tpch_q7_volume_shipping(spark, sf_dir):
     n2 = F.broadcast(nat.select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     ))
-    return (
+    j, rev = _rev(
         li.join(sup, li["l_suppkey"] == sup["s_suppkey"])
         .join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
@@ -274,12 +278,14 @@ def tpch_q7_volume_shipping(spark, sf_dir):
                 & (F.col("cust_nation") == "NATION_1")
             )
         )
-        .groupBy(
+    )
+    return (
+        j.groupBy(
             "supp_nation",
             "cust_nation",
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(dsum(_rev()).alias("revenue"))
+        .agg(dsum(rev).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -333,27 +339,20 @@ def tpch_q8_market_share(spark, sf_dir):
         nat.join(F.broadcast(reg), nat["n_regionkey"] == reg["r_regionkey"])
         .select(F.col("n_nationkey").alias("n2_key"))
     )
-    an = (
+    an, volume = _rev(
         li.join(prt, li["l_partkey"] == prt["p_partkey"])
         .join(sup, li["l_suppkey"] == sup["s_suppkey"])
         .join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(n1, F.col("s_nationkey") == F.col("n1_key"))
         .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .select(
-            F.year("o_orderdate").alias("o_year"),
-            _rev().alias("volume"),
-            "supp_nation",
-        )
     )
     return (
-        an.groupBy("o_year")
+        an.groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             r6(
-                F.sum(
-                    F.when(F.col("supp_nation") == "NATION_5", F.col("volume"))
-                ).cast("double")
-                / F.sum("volume").cast("double")
+                dsum(volume.where("supp_nation = 'NATION_5'"))
+                / dsum(volume)
             ).alias("mkt_share")
         )
         .orderBy("o_year")
@@ -392,16 +391,18 @@ def tpch_q9_product_profit(spark, sf_dir):
     ).select("p_partkey", "p_retailprice")
     sup = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = F.broadcast(load(spark, sf_dir, "nation"))
-    profit = _rev() - (
-        dec("p_retailprice")
-        * dec("l_quantity")
-        * F.lit(0.10).cast("decimal(4,2)")
-    )
-    return (
+    j, (price, disc, retail, qty) = lanes(
         li.join(prt, li["l_partkey"] == prt["p_partkey"])
         .join(sup, li["l_suppkey"] == sup["s_suppkey"])
-        .join(nat, F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
+        .join(nat, F.col("s_nationkey") == F.col("n_nationkey")),
+        "l_extendedprice",
+        ("l_discount", "decimal(4,2)"),
+        "p_retailprice",
+        "l_quantity",
+    )
+    profit = price * (1 - disc) - retail * qty * Decimal("0.10")
+    return (
+        j.groupBy(
             F.col("n_name").alias("nation"),
             F.year("l_shipdate").alias("o_year"),
         )
@@ -437,12 +438,14 @@ def tpch_q10_returned_items(spark, sf_dir):
     )
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     nat = F.broadcast(load(spark, sf_dir, "nation"))
-    return (
+    j, rev = _rev(
         c.join(o, c["c_custkey"] == o["o_custkey"])
         .join(li, li["l_orderkey"] == o["o_orderkey"])
         .join(nat, c["c_nationkey"] == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(dsum(_rev()).alias("revenue"))
+    )
+    return (
+        j.groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
+        .agg(dsum(rev).alias("revenue"))
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)
     )
@@ -478,12 +481,11 @@ def tpch_q11_important_values(spark, sf_dir):
     nat = F.broadcast(
         load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
     )
-    v = (
+    j, rev = _rev(
         li.join(sup, li["l_suppkey"] == sup["s_suppkey"])
         .join(nat, F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy("l_partkey")
-        .agg(F.sum(_rev()).alias("value_dec"))
     )
+    v = j.groupBy("l_partkey").agg(exact_sum(rev).alias("value_dec"))
     t = v.agg(
         (F.sum("value_dec").cast("double") * F.lit(0.001)).alias("thr")
     )
@@ -564,17 +566,13 @@ def tpch_q14_promo_effect(spark, sf_dir):
         & (F.col("l_shipdate") < _ts("1997-10-01"))
     )
     prt = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    return (
-        li.join(prt, li["l_partkey"] == prt["p_partkey"])
-        .agg(
-            r6(
-                F.lit(100.00)
-                * F.sum(F.when(F.col("p_type") == "PROMO", _rev())).cast(
-                    "double"
-                )
-                / F.sum(_rev()).cast("double")
-            ).alias("promo_revenue")
-        )
+    j, rev = _rev(li.join(prt, li["l_partkey"] == prt["p_partkey"]))
+    return j.agg(
+        r6(
+            F.lit(100.00)
+            * dsum(rev.where("p_type = 'PROMO'"))
+            / dsum(rev)
+        ).alias("promo_revenue")
     )
 
 
@@ -604,10 +602,8 @@ def tpch_q15_top_supplier(spark, sf_dir):
         (F.col("l_shipdate") >= _ts("1997-01-01"))
         & (F.col("l_shipdate") < _ts("1997-04-01"))
     )
-    rev = (
-        li.groupBy("l_suppkey")
-        .agg(dsum(_rev()).alias("total_revenue"))
-    )
+    li, rev_lane = _rev(li)
+    rev = li.groupBy("l_suppkey").agg(dsum(rev_lane).alias("total_revenue"))
     mx = rev.agg(F.max("total_revenue").alias("max_rev"))
     sup = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
@@ -693,16 +689,13 @@ def tpch_q17_small_qty_revenue(spark, sf_dir):
     prt = load(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#7"
     ).select("p_partkey")
-    return (
+    j, (price,) = lanes(
         li.join(prt, li["l_partkey"] == prt["p_partkey"])
         .join(pa, li["l_partkey"] == pa["pa_partkey"])
-        .filter(F.col("l_quantity") < F.col("half_avg"))
-        .agg(
-            r6(
-                F.sum(dec("l_extendedprice")).cast("double") / F.lit(7.0)
-            ).alias("avg_yearly")
-        )
+        .filter(F.col("l_quantity") < F.col("half_avg")),
+        "l_extendedprice",
     )
+    return j.agg(r6(dsum(price) / F.lit(7.0)).alias("avg_yearly"))
 
 
 @query(
@@ -783,15 +776,14 @@ def tpch_q19_disjunctive_pred(spark, sf_dir):
         & F.col("p_size").between(1, smax)
         & F.col("l_quantity").between(qlo, qhi)
     )
-    return (
-        li.join(prt, li["l_partkey"] == prt["p_partkey"])
-        .filter(
+    j, rev = _rev(
+        li.join(prt, li["l_partkey"] == prt["p_partkey"]).filter(
             arm("Brand#5", 15, 1, 11)
             | arm("Brand#13", 25, 10, 20)
             | arm("Brand#20", 35, 20, 30)
         )
-        .agg(dsum(_rev()).alias("revenue"))
     )
+    return j.agg(dsum(rev).alias("revenue"))
 
 
 @query(
@@ -953,19 +945,18 @@ def tpch_q22_prospects(spark, sf_dir):
     a LEFT ANTI join against date-filtered orders (the filter pushes to
     the orders scan, shrinking the anti build side); the final group is
     at most 7 rows."""
-    sel = (
+    sel, (bal,) = lanes(
         load(spark, sf_dir, "customer")
         .filter((F.col("c_nationkey") % 7).isin(0, 1, 2, 3))
         .select(
             (F.col("c_nationkey") % 7).cast("int").alias("cntrycode"),
             "c_custkey",
             "c_acctbal",
-        )
+        ),
+        "c_acctbal",
     )
     avg_bal = sel.filter(F.col("c_acctbal") > 0.0).agg(
-        (
-            F.sum(dec("c_acctbal")).cast("double") / F.count("*")
-        ).alias("ab")
+        (dsum(bal) / F.count("*")).alias("ab")
     )
     recent = load(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= _ts("1999-01-01")
@@ -977,7 +968,7 @@ def tpch_q22_prospects(spark, sf_dir):
         .groupBy("cntrycode")
         .agg(
             F.count("*").alias("numcust"),
-            F.sum(dec("c_acctbal")).cast("double").alias("totacctbal"),
+            dsum(bal).alias("totacctbal"),
         )
         .orderBy("cntrycode")
     )

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from naqed_spark.queries._util import date_str, dec, epoch_us, load
+from naqed_spark.queries._util import date_str, epoch_us, exact_sum, lanes, load
 from naqed_spark.registry import query
 
 
@@ -253,10 +253,9 @@ def win_lag_lead(spark, sf_dir):
 
 def _daily_revenue(spark, sf_dir) -> DataFrame:
     """Per-day order revenue in exact decimal (shared by three windows)."""
-    o = load(spark, sf_dir, "orders")
-    return (
-        o.groupBy(date_str("o_orderdate").alias("order_date"))
-        .agg(F.sum(dec("o_totalprice")).alias("daily_dec"))
+    o, (price,) = lanes(load(spark, sf_dir, "orders"), "o_totalprice")
+    return o.groupBy(date_str("o_orderdate").alias("order_date")).agg(
+        exact_sum(price).alias("daily_dec")
     )
 
 
@@ -332,10 +331,10 @@ def win_moving_avg(spark, sf_dir):
     """,
 )
 def win_range_frame(spark, sf_dir):
-    o = load(spark, sf_dir, "orders")
+    o, (price,) = lanes(load(spark, sf_dir, "orders"), "o_totalprice")
     daily = o.groupBy(
         (epoch_us("o_orderdate") / 1000000).cast("bigint").alias("day_s")
-    ).agg(F.sum(dec("o_totalprice")).alias("daily_dec"))
+    ).agg(exact_sum(price).alias("daily_dec"))
     w = Window.orderBy("day_s").rangeBetween(-6 * 86400, Window.currentRow)
     return daily.select(
         "day_s",
@@ -459,12 +458,11 @@ def win_sessionize(spark, sf_dir):
     )
     w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     gap_us = 30 * 60 * 1000 * 1000
-    flagged = ev.withColumn(
+    prev = F.col("prev_us")
+    flagged = ev.withColumn("prev_us", F.lag("ts_us").over(w)).withColumn(
         "is_new",
         F.when(
-            F.lag("ts_us").over(w).isNull()
-            | (F.col("ts_us") - F.lag("ts_us").over(w) > gap_us),
-            1,
+            prev.isNull() | (F.col("ts_us") - prev > gap_us), 1
         ).otherwise(0),
     )
     sess = flagged.withColumn(

@@ -33,7 +33,6 @@ def get_spark(app_name: str = "naqed-spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.driver.memory", os.environ.get("NAQED_DRIVER_MEM", "16g"))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
     return tune_session(builder.getOrCreate())

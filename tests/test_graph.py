@@ -274,6 +274,18 @@ def test_kcore_peel_leaves_only_its_result_pinned(spark):
         free_pins(spark, persistent_rdd_ids(spark) - before)
 
 
+def test_harmonic_centrality_keeps_only_its_layers_pinned(spark):
+    """The result reads only the three layer checkpoints: the edge set and
+    the seen set are freed once the last layer is pinned, and the last
+    layer's seen set is never made."""
+    from naqed_spark.session import release_checkpoints
+
+    release_checkpoints(spark)
+    rows = QUERIES["graph_harmonic_centrality"](spark, SF_DIR).collect()
+    assert rows
+    assert release_checkpoints(spark) == 3
+
+
 def _python_min_labels(verts, edges):
     """Reachability reference: label(v) = min vertex that reaches v along
     the directed ``edges`` (v reaches itself)."""

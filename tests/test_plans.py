@@ -42,6 +42,28 @@ def tree_of(plan: str) -> str:
     return plan.split("\n\n")[0]
 
 
+def plan_expressions(df):
+    """Every expression node of ``df``'s optimized logical plan, as
+    ``(class simple name, node)`` pairs."""
+    out = []
+
+    def walk(node, exprs):
+        it = (node.expressions() if exprs else node.children()).iterator()
+        while it.hasNext():
+            e = it.next()
+            out.append((e.getClass().getSimpleName(), e))
+            walk(e, False)
+
+    def plan(p):
+        walk(p, True)
+        it = p.children().iterator()
+        while it.hasNext():
+            plan(it.next())
+
+    plan(df._jdf.queryExecution().optimizedPlan())
+    return out
+
+
 def test_q1_pushdown_prune_partial_agg(spark):
     plan = plan_of(spark, "agg_groupby_hash")
     # date filter reaches the parquet scan...
@@ -52,6 +74,12 @@ def test_q1_pushdown_prune_partial_agg(spark):
     tree = tree_of(plan)
     assert tree.count("HashAggregate") == 2
     assert tree.count("Exchange") == 1
+    # the money sums run in long lanes: no aggregate sums a decimal input
+    # (a per-row BigDecimal buffer is what the lanes replace)
+    df = QUERIES["agg_groupby_hash"](spark, SF_DIR)
+    sums = [e.child().dataType().simpleString()
+            for name, e in plan_expressions(df) if name == "Sum"]
+    assert sums and not [t for t in sums if t.startswith("decimal")], sums
 
 
 def test_star_join_broadcasts_never_shuffles_fact(spark):
@@ -63,6 +91,14 @@ def test_star_join_broadcasts_never_shuffles_fact(spark):
     assert "SortMergeJoin" not in tree
     # the only exchanges are broadcast sides + the final tiny aggregation
     assert tree.count("Exchange") - tree.count("BroadcastExchange") == 1
+
+
+def test_sessionize_computes_lag_once(spark):
+    # the previous timestamp feeds both halves of the break flag; one
+    # window expression computes it, as the oracle's CTE does
+    df = QUERIES["win_sessionize"](spark, SF_DIR)
+    lags = [n for n, _ in plan_expressions(df) if n == "Lag"]
+    assert len(lags) == 1, lags
 
 
 def test_topk_uses_window_group_limit(spark):

@@ -85,6 +85,56 @@ def test_get_spark_and_tuned_bare_session_agree(spark):
     assert fresh.conf.get("spark.sql.ansi.enabled") == "true"
 
 
+def test_get_spark_sets_no_sql_conf_a_bare_tuned_session_lacks(
+    spark, monkeypatch
+):
+    """Tests plan under the recipe of the benchmark and of a caller that
+    hands over its own session: a bare session (master, shuffle
+    partitions, UI off) run through ``tune_session``. ``get_spark``'s builder is recorded, the SQL confs it
+    sets are applied to a fresh session as a real builder would, and that
+    session must agree with a bare tuned one on every SQL conf either
+    sets."""
+    import types
+
+    import naqed_spark.session as session_mod
+
+    confs = {}
+
+    class Builder:
+        def master(self, _):
+            return self
+
+        def appName(self, _):
+            return self
+
+        def config(self, k, v):
+            confs[k] = v
+            return self
+
+        def getOrCreate(self):
+            s = spark.newSession()
+            for k, v in confs.items():
+                if k.startswith("spark.sql."):
+                    s.conf.set(k, v)
+            return s
+
+    monkeypatch.setattr(
+        session_mod, "SparkSession", types.SimpleNamespace(builder=Builder())
+    )
+    ours = session_mod.get_spark()
+    bare = spark.newSession()
+    bare.conf.set("spark.sql.shuffle.partitions", "200")
+    bare = tune_session(bare)
+    keys = {
+        k for s in (ours, bare) for k in s.conf.getAll
+        if k.startswith("spark.sql.")
+    }
+    assert {k: ours.conf.get(k) for k in keys} == {
+        k: bare.conf.get(k) for k in keys
+    }
+    assert not [k for k in confs if k.startswith("spark.sql.")]
+
+
 def test_catalog_df_cache_is_per_session_and_lazy(spark):
     """load() returns the SAME analyzed frame within a session (the r16
     build-constant win), events normalization included; the store holds
