@@ -1929,26 +1929,21 @@ class Engine:
     def _traverse_frame(
         self, entity: str, tr: TraverseSpec, refs: frozenset
     ) -> DataFrame:
-        """$traverse (round 14, M19): BFS reachability to max-depth or
-        fixpoint, compiling to the verified DataFrame-Pregel shape the
-        §2-I graph keys carry (graph_reachability_bfs): per superstep
-        ONE equi-join of the frontier against the edge set (shuffled on
+        """$traverse (round 14, M19): BFS reachability, or with $weight
+        the cheapest path cost, to max-depth or fixpoint. Both run on
+        ``graph.relax_min``, the one min-relaxation loop the §2-I graph
+        keys carry: per superstep ONE equi-join of the vertices whose
+        cost changed last superstep against the edge set (shuffled on
         vertex id; at 100 TB edges are pre-partitioned by src and the
-        tiny frontier broadcasts under AQE) + a distinct + an anti-join
-        against visited, with ``localCheckpoint()`` per superstep to
-        cut lineage (the plan doubles per iteration otherwise) — the
-        same ``graph.bfs_levels`` loop, run like every checkpointed
-        loop by the ``_util.fixpoint`` driver (O(1) retained pinned
-        state). Returns the root entity's rows restricted to the
-        reached set, plus the min-hop depth column ``tr.alias`` (0 on
-        seeds)."""
-        from naqed_spark.queries._util import (
-            checkpoint_observed,
-            fixpoint,
-            pin,
-            scoped_persist,
-        )
-        from naqed_spark.queries.graph import bfs_levels
+        small active set broadcasts under AQE), one min aggregation per
+        vertex and one ``localCheckpoint()`` to cut lineage, driven like
+        every checkpointed loop by ``_util.fixpoint`` (O(1) retained
+        pinned state). Unweighted edges weigh 1; integer weights stay in
+        exact BIGINT and fractional weights run in double. Returns the
+        root entity's rows restricted to the reached set, plus the
+        min-hop depth (or min cost) column ``tr.alias`` (0 on seeds)."""
+        from naqed_spark.queries._util import scoped_persist
+        from naqed_spark.queries.graph import relax_min
 
         pk = PRIMARY_KEYS.get(entity)
         if pk is None:
@@ -2041,64 +2036,25 @@ class Engine:
                 f" negative cycle); set $max_depth to bound the search"
                 f" explicitly"
             )
+        w, zero = "1", "0"
         if tr.weight is not None:
-            # M22 (round 14, engine-half): cheapest-path mode — frontier
-            # Bellman-Ford, the verified graph_shortest_path_weighted
-            # shape with the frontier optimization: each round relaxes
-            # ONLY from vertices whose best cost improved last round
-            # (one equi-join + per-vertex min + an improvement
-            # anti-check), so a converged region stops costing joins.
-            # Integer weights stay in exact BIGINT; fractional weights
-            # run in double (per-path accumulation is left-to-right in
-            # both engines — deterministic per path; min across paths
-            # is order-free).
+            # per-path accumulation is left-to-right in both engines —
+            # deterministic per path; min across paths is order-free
             wt = dict(
                 (f.name, f.dataType.simpleString()) for f in edges.schema
             )["w"]
             cost_t = ("bigint" if wt in ("tinyint", "smallint", "int",
                                          "bigint") else "double")
-
-            def relax(state, _):
-                best, frontier = state
-                cand = (
-                    frontier.join(edges, frontier.v == edges.src)
-                    .select(
-                        F.col("dst").alias("v"),
-                        (F.col("__t_d")
-                         + F.col("w").cast(cost_t)).alias("__t_d"),
-                    )
-                    .groupBy("v")
-                    .agg(F.min("__t_d").alias("__t_d"))
-                )
-                old = best.select("v", F.col("__t_d").alias("__t_old"))
-                improved, m = checkpoint_observed(  # cut lineage per round
-                    cand.join(old, "v", "left")
-                    .where(F.col("__t_old").isNull()
-                           | (F.col("__t_d") < F.col("__t_old")))
-                    .select("v", "__t_d"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                # nothing improved: the next round relaxes from an
-                # empty frontier, so best is final
-                if m["n"] == 0:
-                    return (best, improved), True
-                best = pin(
-                    best.unionAll(improved)
-                    .groupBy("v")
-                    .agg(F.min("__t_d").alias("__t_d"))
-                )
-                return (best, improved), False
-
-            best = seeds.select("v", F.lit(0).cast(cost_t).alias("__t_d"))
-            visited, _ = fixpoint(
-                self.spark, "$traverse", (best, best), relax, cap,
-                at_cap=at_cap,
-            )
-        else:
-            visited = bfs_levels(
-                self.spark, edges, seeds, cap, "$traverse", at_cap
-            ).withColumnRenamed("d", "__t_d")
-        reached = visited.withColumnRenamed("v", "__t_v")
+            w, zero = f"CAST(w AS {cost_t})", f"CAST(0 AS {cost_t})"
+        visited = relax_min(
+            self.spark,
+            seeds.selectExpr("v", f"{zero} AS d"),
+            edges.selectExpr("src", "dst", f"{w} AS w"),
+            "$traverse",
+            cap,
+            at_cap,
+        )
+        reached = visited.selectExpr("v AS __t_v", "d AS __t_d")
         return (
             ent.join(reached, ent[pk] == reached["__t_v"])
             .drop("__t_v")

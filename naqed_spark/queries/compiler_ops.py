@@ -2284,11 +2284,11 @@ def compiler_null_combinators(spark, sf_dir):
 def compiler_traverse_reachable(spark, sf_dir):
     """Scale shape: each superstep is ONE frontier ⋈ edges equi-join
     (shuffled on vertex id — at 100 TB edges are pre-partitioned by src
-    and the tiny frontier broadcasts under AQE) + distinct + anti-join
-    vs visited, with localCheckpoint per superstep cutting lineage — the
-    ``graph.bfs_levels`` loop, whose ``_util.fixpoint`` driver holds
-    retained state at O(1). State per vertex is O(1); no cartesian
-    anywhere (plan-linted)."""
+    and the tiny frontier broadcasts under AQE) + one min aggregation
+    per vertex, with localCheckpoint per superstep cutting lineage — the
+    ``graph.relax_min`` loop with unit weights, whose ``_util.fixpoint``
+    driver holds retained state at O(1). State per vertex is O(1); no
+    cartesian anywhere (plan-linted)."""
     from naqed_spark.compiler.engine import Engine
 
     eng = Engine(spark, sf_dir)
@@ -2895,13 +2895,14 @@ def compiler_regex_text(spark, sf_dir):
     """,
 )
 def compiler_traverse_cheapest(spark, sf_dir):
-    """Scale shape: frontier Bellman-Ford — per round ONE equi-join of
-    the improved-vertex frontier against the edge set + a per-vertex
-    min + an improvement anti-check, localCheckpoint per round, O(1)
-    pinned state from the shared ``_util.fixpoint`` driver; converged
-    regions stop costing joins. The edge sub-query is a compiled DSL codegen projection
-    (the parallel-edge bundles ride the relaxation, never a
-    pre-aggregation shuffle)."""
+    """Scale shape: frontier Bellman-Ford (``graph.relax_min``) — per
+    round ONE equi-join of the improved-vertex frontier against the edge
+    set + one per-vertex min over the old costs and the messages, one
+    localCheckpoint per round, O(1) pinned state from the shared
+    ``_util.fixpoint`` driver; converged regions stop costing joins. The
+    edge sub-query is a compiled DSL codegen projection (the
+    parallel-edge bundles ride the relaxation, never a pre-aggregation
+    shuffle)."""
     from naqed_spark.compiler.engine import Engine
 
     eng = Engine(spark, sf_dir)

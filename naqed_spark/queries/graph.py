@@ -10,7 +10,8 @@ checkpointed loop runs on the one superstep driver ``_util.fixpoint``
 (Pregelix's design): each algorithm supplies only its superstep, and the
 driver frees the pins its steps made once the state no longer holds
 them, guards the cap and writes the DEBUG superstep record. Shared
-loops: ``bfs_levels``, ``bellman_ford``, ``min_labels``, ``pagerank``,
+loops: ``relax_min`` (one min-relaxation loop: BFS, weighted shortest
+paths and, as ``min_labels``, min-label propagation), ``pagerank``,
 ``kcore_peel``.
 
 Graphs used:
@@ -279,9 +280,9 @@ _BFS_CAP = 10
 
 @query(
     "graph_reachability_bfs",
-    # BFS levels from vertex 0 to fixpoint (cap 10, mirrored in the CTE).
-    # DataFrame-Pregel: frontier ⋈ edges → subtract visited, localCheckpoint
-    # each superstep to cut lineage. Min-distance is unique → deterministic.
+    # BFS levels from vertex 0 to fixpoint (cap 10, mirrored in the CTE):
+    # relax_min with unit weights, one checkpoint per superstep to cut
+    # lineage. Min-distance is unique → deterministic.
     oracle=f"""
     WITH RECURSIVE ue AS ({_UE_SQL}),
     r(v, d) AS (
@@ -294,41 +295,72 @@ _BFS_CAP = 10
 )
 def graph_reachability_bfs(spark, sf_dir):
     ue = user_edges(spark, sf_dir)
-    seed = spark.range(1).select(F.lit(0).cast("bigint").alias("v"))
-    visited = bfs_levels(spark, ue, seed, _BFS_CAP, "graph_reachability_bfs")
-    return visited.select(F.col("v").alias("user_id"), F.col("d").alias("dist"))
-
-
-def bfs_levels(spark, edges, seeds, cap, loop, at_cap=None):
-    """(v, d): the min hop count ``d`` from the ``seeds`` (col v, d = 0)
-    to every vertex reachable over ``edges`` (cols src, dst) in at most
-    ``cap`` hops — the BFS behind graph_reachability_bfs and the
-    unweighted ``$traverse``. Per superstep the frontier joins the edges,
-    and the vertices not yet visited form the next frontier; an empty
-    frontier is the fixpoint; ``at_cap`` is raised if the cap stops the
-    loop."""
-
-    def step(state, depth):
-        visited, frontier = state
-        # the checkpoint cuts lineage (the plan doubles per superstep else)
-        nxt, m = checkpoint_observed(
-            frontier.join(edges, frontier.v == edges.src)
-            .select(F.col("dst").alias("v"))
-            .distinct()
-            .join(visited.select("v"), "v", "left_anti")
-            .select("v", F.lit(depth).alias("d")),
-            F.count(F.lit(1)).alias("n"),
-        )
-        # an empty frontier is a fixpoint: the next round joins nothing
-        if m["n"] == 0:
-            return (visited, nxt), True
-        return (pin(visited.unionAll(nxt)), nxt), False
-
-    visited = seeds.select("v", F.lit(0).alias("d"))
-    visited, _ = fixpoint(
-        spark, loop, (visited, visited), step, cap, at_cap=at_cap
+    seed = spark.range(1).selectExpr("CAST(0 AS BIGINT) AS v", "0 AS d")
+    visited = relax_min(
+        spark, seed, ue.selectExpr("src", "dst", "1 AS w"),
+        "graph_reachability_bfs", _BFS_CAP,
     )
-    return visited
+    return visited.selectExpr("v AS user_id", "d AS dist")
+
+
+def relax_min(spark, verts, edges, loop, cap, at_cap=None):
+    """(v, d): for every vertex reached from the start vertices ``verts``
+    (cols v, d) over ``edges`` (cols src, dst, w), the min of a start
+    vertex's ``d`` plus the weights of a path of at most ``cap`` edges
+    from it — Pregel's vertex program with a ``min`` combiner, the one
+    loop behind BFS (w = 1, d = 0 on the seeds), weighted shortest paths
+    (w = the edge weight, d = 0 at the sources) and min-label
+    propagation (w = 0, d = v: ``min_labels``).
+
+    The state is the vertex relation (v, d, active); every start vertex
+    begins active. One superstep, planned as Pregelix plans it: the
+    active vertices join the edges and send d + w; the messages are
+    unioned with the vertex relation, and one group-by per vertex takes
+    the new d = least(old, min message) and active = coalesce(message <
+    old, old IS NULL). One checkpoint per superstep cuts the lineage and
+    observes count_if(active) in its own job; the loop stops when that
+    count is 0, and raises ``at_cap`` (when given) if the cap stops it.
+    The step is spelled as SQL text, which takes fewer py4j round trips
+    than the same step in Column calls.
+
+    Why the rows are exact:
+    - Frontier. Only vertices whose d changed send: a vertex whose d did
+      not change would resend a value its neighbours already took the
+      min over.
+    - Cap. After r supersteps, d is the min over paths of at most r
+      edges: the fixed-round Bellman-Ford spelling, so a cap
+      (``$max_depth``, the 6-round SSSP cap) keeps its meaning.
+    - Stop. count_if(active) = 0 holds exactly when a superstep changed
+      nothing, so every later superstep would send nothing. This holds
+      for double weights too, where a (count, sum) summary of the state
+      would not be exact.
+    - BFS. With unit weights a reached vertex is never lowered, so the
+      active set is exactly the BFS frontier and the supersteps are the
+      BFS levels."""
+
+    def step(state, _):
+        msgs = (
+            state.where("active")
+            .join(edges, F.expr("v = src"))
+            .selectExpr("dst AS v", "NULL AS old", "d + w AS m")
+        )
+        state, m = checkpoint_observed(
+            state.selectExpr("v", "d AS old", "NULL AS m")
+            .unionAll(msgs)
+            .groupBy("v")
+            .agg(F.expr("min(old) AS old"), F.expr("min(m) AS m"))
+            .selectExpr(
+                "v",
+                "least(old, m) AS d",
+                "coalesce(m < old, old IS NULL) AS active",
+            ),
+            F.expr("count_if(active) AS n"),
+        )
+        return state, m["n"] == 0
+
+    state = verts.selectExpr("v", "d", "true AS active")
+    state = fixpoint(spark, loop, state, step, cap, at_cap=at_cap)
+    return state.select("v", "d")
 
 
 # nation graph: undirected same-region cliques, integer weight |n1 - n2|
@@ -374,51 +406,11 @@ def _nation_edges(spark, sf_dir):
 )
 def graph_shortest_path_weighted(spark, sf_dir):
     ne = scoped_persist(_nation_edges(spark, sf_dir))
-    return bellman_ford(spark, ne, 0).select(
-        F.col("v").alias("nationkey"), F.col("cost").alias("dist")
+    source = spark.range(1).selectExpr("0 AS v", "CAST(0 AS BIGINT) AS d")
+    dist = relax_min(
+        spark, source, ne, "graph_shortest_path_weighted", _SSSP_ROUNDS
     )
-
-
-def bellman_ford(spark, edges, source, rounds=_SSSP_ROUNDS):
-    """(v, cost): the cheapest cost from ``source`` to every vertex over
-    paths of at most ``rounds`` edges of ``edges`` (cols src, dst, w;
-    integer weights, so costs are exact BIGINT) — the Bellman-Ford loop
-    behind graph_shortest_path_weighted, factored so hand-built graphs
-    can drive it (tests/test_graph.py). Stops early once a round changes
-    nothing, with the rows of the all-rounds spelling."""
-
-    def step(state, _):
-        dist, prev = state
-        relaxed = (
-            dist.join(edges, dist.v == edges.src)
-            .select(
-                F.col("dst").alias("v"),
-                (F.col("cost") + F.col("w")).alias("cost"),
-            )
-        )
-        dist, m = checkpoint_observed(
-            dist.unionAll(relaxed)
-            .groupBy("v")
-            .agg(F.min("cost").alias("cost")),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("cost").alias("s"),
-        )
-        # Stop when (vertex count, cost sum) repeats. Exact: each round
-        # is a min over the previous dist ∪ its relaxations, so dist only
-        # gains vertices and only lowers costs. An equal count means no
-        # vertex was added; with every cost ≤ its previous value, an
-        # equal sum means none was lowered. The round changed nothing,
-        # and every later round would recompute this same frame.
-        return (dist, (m["n"], m["s"])), (m["n"], m["s"]) == prev
-
-    dist = spark.range(1).select(
-        F.lit(source).cast(edges.schema["src"].dataType).alias("v"),
-        F.lit(0).cast("bigint").alias("cost"),
-    )
-    dist, _ = fixpoint(
-        spark, "graph_shortest_path_weighted", (dist, (1, 0)), step, rounds
-    )
-    return dist
+    return dist.selectExpr("v AS nationkey", "d AS dist")
 
 
 @query(
@@ -451,39 +443,24 @@ def graph_connected_components(spark, sf_dir):
 def min_labels(spark, verts, edges, loop, cap=20):
     """(v, lab): the min vertex id that reaches ``v`` over ``edges`` (cols
     src, dst; messages flow src → dst), for every vertex of ``verts``
-    (col v) — min-label propagation, the loop behind connected
-    components (symmetric edges), SCC's forward and backward reach and
-    llm_dedup_groups. One edge ⋈ label equi-join + min aggregation per
-    superstep (the aggregateMessages shape), O(1) state per vertex.
-
-    Stops on a round that lowers no label, counted in the step's own
-    checkpoint job. Exact: a label changes only where ``m < lab``, so a
-    count of 0 is a round that changed nothing. Raises at the cap — the
-    labels are only minimal at the fixpoint, and silent wrong labels are
-    worse than a loud stop."""
-
-    def step(lab, _):
-        msgs = (
-            edges.join(lab, edges["src"] == lab["v"])
-            .groupBy(F.col("dst").alias("mv"))
-            .agg(F.min("lab").alias("m"))
-        )
-        lab, m = checkpoint_observed(
-            lab.join(msgs, lab["v"] == msgs["mv"], "left").select(
-                "v",
-                F.least("lab", "m").alias("lab"),
-                (F.col("m") < F.col("lab")).alias("lowered"),
-            ),
-            F.count_if("lowered").alias("n"),
-        )
-        return lab, m["n"] == 0
-
-    lab = verts.select("v", F.col("v").alias("lab"))
+    (col v, which holds every endpoint of ``edges``) — min-label
+    propagation, ``relax_min`` with w = 0 and d = v: the loop behind
+    connected components (symmetric edges), SCC's forward and backward
+    reach and llm_dedup_groups. Raises at the cap — the labels are only
+    minimal at the fixpoint, and silent wrong labels are worse than a
+    loud stop."""
     unconverged = RuntimeError(
         f"{loop}: min-label propagation did not converge in {cap} supersteps"
     )
-    lab = fixpoint(spark, loop, lab, step, cap, at_cap=unconverged)
-    return lab.select("v", "lab")
+    lab = relax_min(
+        spark,
+        verts.selectExpr("v", "v AS d"),
+        edges.selectExpr("src", "dst", "0 AS w"),
+        loop,
+        cap,
+        at_cap=unconverged,
+    )
+    return lab.selectExpr("v", "d AS lab")
 
 
 def _pagerank_oracle() -> str:

@@ -28,7 +28,6 @@ float folds get the round(6) hedge; argmin/top-k tie-break on ids.
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import Window, functions as F
@@ -446,11 +445,7 @@ _KNN_BLOCK_BYTES = 64 << 20
 
 
 def _knn_block_rows(dim: int) -> int:
-    """Candidate block size in rows for a given embedding dim. Env override
-    (NAQED_KNN_BLOCK_ROWS) wins — tests force the multi-block path with it."""
-    env = os.environ.get("NAQED_KNN_BLOCK_ROWS")
-    if env:
-        return int(env)
+    """Candidate block size in rows for a given embedding dim."""
     return max(1024, _KNN_BLOCK_BYTES // (int(dim) * 8))
 
 
@@ -521,36 +516,32 @@ def _blocked_union(spark, e, schema: str, gen_factory):
     the blocked arbiter enforces — if the actual payload exceeds it,
     fall through to the stats-job arbiter (the pathological case pays
     one wasted collect; the memory contract holds). Larger tables take
-    the stats-job arbiter exactly as before, as does a test pinning
-    NAQED_KNN_BLOCK_ROWS."""
-    if "NAQED_KNN_BLOCK_ROWS" not in os.environ:
-        try:
-            est = int(
-                e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est = -1
-        if 0 <= est * 8 <= _KNN_BLOCK_BYTES:
-            blk = e.toArrow()
-            if blk.num_rows == 0:
-                return spark.createDataFrame([], schema)
-            # dim from the MAX list length over the whole block (r17
-            # review: the first row alone can be NULL/short, which would
-            # let an oversized payload past the row cap)
-            import pyarrow.compute as pc
+    the stats-job arbiter exactly as before."""
+    try:
+        est = int(
+            e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        est = -1
+    if 0 <= est * 8 <= _KNN_BLOCK_BYTES:
+        blk = e.toArrow()
+        if blk.num_rows == 0:
+            return spark.createDataFrame([], schema)
+        # dim from the MAX list length over the whole block (r17
+        # review: the first row alone can be NULL/short, which would
+        # let an oversized payload past the row cap)
+        import pyarrow.compute as pc
 
-            dim_a = max(
-                1,
-                pc.max(
-                    pc.list_value_length(blk.column("embedding"))
-                ).as_py()
-                or 0,
-            )
-            if blk.num_rows <= _knn_block_rows(dim_a):
-                bc = _broadcast_arrow_block(spark, blk)
-                return e.mapInPandas(gen_factory(bc), schema=schema)
-            # actual rows exceed the block budget the estimate promised:
-            # take the blocked path below
+        dim_a = max(
+            1,
+            pc.max(pc.list_value_length(blk.column("embedding"))).as_py()
+            or 0,
+        )
+        if blk.num_rows <= _knn_block_rows(dim_a):
+            bc = _broadcast_arrow_block(spark, blk)
+            return e.mapInPandas(gen_factory(bc), schema=schema)
+        # actual rows exceed the block budget the estimate promised:
+        # take the blocked path below
     lo, hi, n, dim = e.agg(
         F.min("vec_id"),
         F.max("vec_id"),

@@ -154,11 +154,13 @@ def test_fixpoint_loops_pinned_rdds_flat(spark):
         unpersist_rdds(spark, mine)
 
 
-# Fixed-round vs converged-stop equivalence for the two loops whose stop
-# test compares a round's observed summary with the previous round's.
-# Each graph sits on a boundary: the path's last vertex only reaches its
-# cheapest cost in round 6 of 6, the lollipop tails peel one vertex per
-# round, and the capped cases stop on the cap with work still left.
+# Fixed-round vs converged-stop equivalence for the loops whose stop
+# test is observed in a superstep's own checkpoint job. Each graph sits
+# on a boundary: on the path, vertex 3 is reached at cost 50 in round 1
+# and lowered to 6 in round 3 (so a lowered vertex must send again) and
+# the last vertex only reaches its cheapest cost in round 6; the lollipop
+# tails peel one vertex per round, and the capped cases stop on the cap
+# with work still left.
 _PATH7 = [(i, i + 1, i + 1) for i in range(6)] + [(0, 3, 50), (0, 6, 100)]
 _CLIQUE = [(a, b, abs(a - b)) for a in range(4) for b in range(4) if a != b]
 
@@ -175,21 +177,114 @@ def _python_bellman_ford(edges, source, rounds):
     return dist
 
 
+def _python_bfs(edges, seeds, cap):
+    """Level-by-level BFS: the min hop count from ``seeds``, at most
+    ``cap`` hops."""
+    dist = {v: 0 for v in seeds}
+    frontier = set(seeds)
+    for depth in range(1, cap + 1):
+        frontier = {d for s, d, *_ in edges if s in frontier} - set(dist)
+        dist.update((v, depth) for v in frontier)
+    return dist
+
+
+def _relax_from_zero(spark, edges, schema, cap, w="w"):
+    """``relax_min`` from source 0 over ``edges`` with weight ``w``."""
+    from naqed_spark.queries.graph import relax_min
+
+    e = spark.createDataFrame(edges, schema).selectExpr(
+        "src", "dst", f"{w} AS w"
+    )
+    start = spark.range(1).selectExpr(
+        "CAST(0 AS BIGINT) AS v", "CAST(0 AS BIGINT) AS d"
+    )
+    return {
+        r["v"]: r["d"]
+        for r in relax_min(spark, start, e, "test", cap).collect()
+    }
+
+
 @pytest.mark.parametrize(
     "edges,rounds",
-    [(_PATH7, 6), (_PATH7, 4), (_CLIQUE, 6)],
-    ids=["path7-improves-in-last-round", "path7-capped", "clique-converges"],
+    [(_PATH7, 6), (_PATH7, 4), (_CLIQUE, 6)]
+    + [(_PATH7, cap) for cap in (1, 2, 3, 5, 7)],
+    ids=["path7-improves-in-last-round", "path7-capped", "clique-converges"]
+    + [f"path7-cap{cap}" for cap in (1, 2, 3, 5, 7)],
 )
 def test_bellman_ford_converged_stop_matches_fixed_rounds(
     spark, edges, rounds
 ):
-    from naqed_spark.queries.graph import bellman_ford
-
-    e = spark.createDataFrame(edges, "src long, dst long, w long")
-    got = {
-        r["v"]: r["cost"] for r in bellman_ford(spark, e, 0, rounds).collect()
-    }
+    got = _relax_from_zero(spark, edges, "src long, dst long, w long", rounds)
     assert got == _python_bellman_ford(edges, 0, rounds)
+
+
+def test_relax_min_double_weights_match_fixed_rounds(spark):
+    """Fractional weights sum in double along each path in both
+    spellings, so the costs match exactly, including 0.1 + 0.2 against a
+    direct 0.3 edge."""
+    edges = [(s, d, w / 10) for s, d, w in _PATH7] + [(0, 2, 0.3)]
+    for cap in (2, 6):
+        got = _relax_from_zero(
+            spark, edges, "src long, dst long, w double", cap
+        )
+        assert got == _python_bellman_ford(edges, 0, cap)
+
+
+def test_relax_min_unit_weights_match_bfs(spark):
+    """With w = 1 the loop is BFS: min hop counts, capped or not."""
+    edges = _PATH7 + [(6, 7, 1), (7, 8, 1), (9, 0, 1)]
+    for cap in (2, 10):
+        got = _relax_from_zero(
+            spark, edges, "src long, dst long, w long", cap, w="1"
+        )
+        assert got == _python_bfs(edges, [0], cap)
+
+
+@pytest.mark.quick
+@pytest.mark.parametrize("w", ["0", "1", "w"], ids=["labels", "bfs", "sssp"])
+def test_relax_min_makes_one_checkpoint_per_superstep(spark, caplog, w):
+    """Each superstep pins one checkpoint, freed once the next superstep
+    replaces it: the DEBUG record reads pins_freed = supersteps - 1, and
+    the one new pin left is the result."""
+    import logging
+    import re
+
+    from naqed_spark.queries._util import held_pins
+    from naqed_spark.queries.graph import relax_min
+    from naqed_spark.session import free_pins, persistent_rdd_ids
+
+    e = spark.createDataFrame(_PATH7, "src long, dst long, w long")
+    if w == "0":  # min labels: every vertex starts at its own id
+        start = (
+            e.selectExpr("src AS v")
+            .union(e.selectExpr("dst AS v"))
+            .distinct()
+            .selectExpr("v", "v AS d")
+        )
+    else:
+        start = spark.range(1).selectExpr("0 AS v", "CAST(0 AS BIGINT) AS d")
+    before = persistent_rdd_ids(spark)
+    try:
+        with caplog.at_level(logging.DEBUG, logger="naqed_spark"):
+            got = relax_min(
+                spark, start, e.selectExpr("src", "dst", f"{w} AS w"),
+                "test", 20,
+            )
+        new = persistent_rdd_ids(spark) - before
+        assert len(new) == 1 and held_pins(got) == new
+        [msg] = [
+            r.getMessage() for r in caplog.records if r.name == "naqed_spark"
+        ]
+        m = re.fullmatch(
+            r"fixpoint loop=test supersteps=(\d+) cap=20 stop=converged"
+            r" pins_freed=(\d+)",
+            msg,
+        )
+        assert m, msg
+        steps, freed = int(m[1]), int(m[2])
+        assert steps >= 4 and freed == steps - 1
+    finally:
+        free_pins(spark, persistent_rdd_ids(spark) - before)
 
 
 def _lollipop(tail):
@@ -366,7 +461,8 @@ def test_fixpoint_superstep_records(spark, caplog):
     nation graph's direct same-region edges are already cheapest, so
     round 2 changes nothing and Bellman-Ford stops there, not at the
     6-round cap; a k=2 peel of a 3-vertex tail stops one round after
-    the tail is gone."""
+    the tail is gone; the weighted ``$traverse`` stops on its 12-round
+    cap, with one checkpoint per superstep."""
     import logging
 
     from naqed_spark.queries.graph import kcore_peel
@@ -377,12 +473,15 @@ def test_fixpoint_superstep_records(spark, caplog):
         kcore_peel(spark, spark.createDataFrame(
             pairs + [(b, a) for a, b in pairs], "v long, n long"
         ), 2, 8)
+        QUERIES["compiler_traverse_cheapest"](spark, SF_DIR).collect()
     msgs = [r.getMessage() for r in caplog.records if r.name == "naqed_spark"]
     assert msgs == [
         "fixpoint loop=graph_shortest_path_weighted supersteps=2 cap=6"
         " stop=converged pins_freed=1",
         "fixpoint loop=graph_kcore supersteps=4 cap=8 stop=converged"
         " pins_freed=4",
+        "fixpoint loop=$traverse supersteps=12 cap=12 stop=cap"
+        " pins_freed=11",
     ]
 
 

@@ -88,16 +88,15 @@ def test_ngram_candidates_match_join_spelling(spark):
         ), f"cap={cap}"
 
 
-def test_knn_fast_path_matches_blocked_path(spark):
+def test_knn_fast_path_matches_blocked_path(spark, monkeypatch):
     """_blocked_union's estimate-based single-block fast path returns the
-    same rows as the forced multi-block path (NAQED_KNN_BLOCK_ROWS)."""
+    same rows as the forced multi-block path (a 37-row block)."""
+    from naqed_spark.queries import llm
+
     key = "llm_knn_bruteforce"
     fast = QUERIES[key](spark, SF_DIR)
     fast_rows = sorted(map(tuple, fast.collect()))
-    os.environ["NAQED_KNN_BLOCK_ROWS"] = "37"  # forces many blocks
-    try:
-        blocked = QUERIES[key](spark, SF_DIR)
-        blocked_rows = sorted(map(tuple, blocked.collect()))
-    finally:
-        del os.environ["NAQED_KNN_BLOCK_ROWS"]
+    monkeypatch.setattr(llm, "_knn_block_rows", lambda dim: 37)
+    blocked = QUERIES[key](spark, SF_DIR)
+    blocked_rows = sorted(map(tuple, blocked.collect()))
     assert fast_rows == blocked_rows

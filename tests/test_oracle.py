@@ -49,7 +49,9 @@ def test_knn_blocked_multiblock(spark, duck, monkeypatch):
     hash-exact oracle match as the default single-block run — proves the
     per-block top-k + relational merge is exact, not just the degenerate
     1-block case."""
-    monkeypatch.setenv("NAQED_KNN_BLOCK_ROWS", "150")
+    from naqed_spark.queries import llm
+
+    monkeypatch.setattr(llm, "_knn_block_rows", lambda dim: 150)
     for key in ("llm_knn_bruteforce", "llm_similarity_threshold_join"):
         problems = check_key(spark, duck, key, SF_DIR)
         assert not problems, "\n".join(problems)
@@ -159,23 +161,25 @@ def test_no_oracle_emits_hugeint(duck):
 
 def test_kernel_checkpoint_hygiene(spark, monkeypatch):
     """VERDICT r4 item 6: the blocked vector kernel must not accumulate
-    pinned RDDs. Multi-block (forced via env): exactly ONE result-sized
-    checkpoint survives the build (the merged frame; per-block partials
-    are unpersisted), the result is still correct after its partials were
-    freed, and release_checkpoints() empties block storage. Single-block:
-    the lazy path pins nothing at all."""
+    pinned RDDs. Multi-block (150-row blocks, so the fast path falls
+    through to 4 blocks): exactly ONE result-sized checkpoint survives
+    the build (the merged frame; per-block partials are unpersisted),
+    the result is still correct after its partials were freed, and
+    release_checkpoints() empties block storage. Single-block: the lazy
+    path pins nothing at all."""
+    from naqed_spark.queries import llm
     from naqed_spark.registry import QUERIES
     from naqed_spark.session import persistent_rdd_ids, release_checkpoints
 
     release_checkpoints(spark)
-    monkeypatch.setenv("NAQED_KNN_BLOCK_ROWS", "150")
+    monkeypatch.setattr(llm, "_knn_block_rows", lambda dim: 150)
     df = QUERIES["llm_knn_bruteforce"](spark, SF_DIR)
     assert len(persistent_rdd_ids(spark)) == 1
     assert df.count() == 500 * 5
     assert release_checkpoints(spark) == 1
     assert persistent_rdd_ids(spark) == set()
 
-    monkeypatch.delenv("NAQED_KNN_BLOCK_ROWS")
+    monkeypatch.undo()
     df1 = QUERIES["llm_knn_bruteforce"](spark, SF_DIR)
     assert persistent_rdd_ids(spark) == set()
     assert df1.count() == 500 * 5
