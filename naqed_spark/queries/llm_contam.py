@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from naqed_spark.queries._util import load, scoped_persist
+from naqed_spark.queries.llm import _word_ngrams
 from naqed_spark.registry import query
 
 # Deterministic held-out "benchmark" slice: ~1% of doc ids. A real
@@ -41,16 +42,6 @@ _TOKS_SQL = """
     SELECT doc_id, string_split(text, ' ') AS w
     FROM documents
 """
-
-
-def _word_ngrams(col_words: str, n: int):
-    """Column expr: all overlapping word n-grams of ``col_words`` (an
-    array<string>), order-preserving, NOT distinct. Stays in codegen —
-    transform/slice/array_join are JVM higher-order functions."""
-    return F.expr(
-        f"transform(sequence(1, size({col_words}) - {n - 1}),"
-        f" i -> array_join(slice({col_words}, i, {n}), ' '))"
-    )
 
 
 @query(

@@ -18,7 +18,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from naqed_spark.queries._util import load, pin, scoped_persist, spread, unpin
-from naqed_spark.queries.llm import _SHINGLES_SQL, _SIG_COLS_SQL, llm_neardup_lsh
+from naqed_spark.queries.llm import (
+    _BANDS_SQL,
+    _CAND_SQL,
+    _SHINGLES_SQL,
+    _SIG_COLS_SQL,
+    llm_neardup_lsh,
+)
 from naqed_spark.registry import query
 
 # [.] instead of \. — identical in Java regex and RE2, and immune to the
@@ -86,17 +92,8 @@ def llm_pii_scrub(spark, sf_dir):
     oracle=f"""
     WITH RECURSIVE sh AS ({_SHINGLES_SQL}),
     sigs AS (SELECT doc_id, sset, {_SIG_COLS_SQL} FROM sh),
-    bands AS (
-      SELECT doc_id, 0 AS band, md5(sig0 || sig1) AS bh FROM sigs
-      UNION ALL SELECT doc_id, 1, md5(sig2 || sig3) FROM sigs
-      UNION ALL SELECT doc_id, 2, md5(sig4 || sig5) FROM sigs
-      UNION ALL SELECT doc_id, 3, md5(sig6 || sig7) FROM sigs
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-    ),
+    bands AS ({_BANDS_SQL}),
+    cand AS ({_CAND_SQL}),
     pairs AS (
       SELECT id_a, id_b FROM cand
       JOIN sigs sa ON sa.doc_id = id_a
@@ -125,16 +122,10 @@ def llm_dedup_groups(spark, sf_dir):
     implementation). Emits (doc_id, keep_id, n_members) for every doc that
     appears in at least one near-dup pair; dropping rows with
     doc_id != keep_id IS the dedup."""
-    from naqed_spark.queries.graph import min_labels
+    from naqed_spark.queries.graph import _symmetric, min_labels
 
     pairs = llm_neardup_lsh(spark, sf_dir).select("id_a", "id_b")
-    sym = pin(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-    )
+    sym = pin(_symmetric(pairs.toDF("src", "dst"), "src", "dst"))
     # a near-dup component of diameter > 20 raises rather than return
     # non-minimal labels the oracle's transitive closure would not match
     verts = sym.select(F.col("src").alias("v")).distinct()

@@ -23,6 +23,7 @@ from naqed_spark.queries._util import (
     sorted_pairs_expr,
     spread,
 )
+from naqed_spark.queries.llm import _shingle_sets
 from naqed_spark.registry import query
 
 _HEX = "0123456789abcdef"
@@ -621,33 +622,6 @@ def llm_tokenize_bpe_regex(spark, sf_dir):
 _NGRAM_DF_CAP = 64
 
 
-def _shingle_sets(corpus):
-    """(doc_id, sset): distinct 5-word shingles per doc with >= 5 words.
-
-    Words are projected once before the shingle lambda — an inline
-    ``split(text)`` in the lambda body is re-evaluated per element by the
-    interpreted HOF path, i.e. O(words²) splits per doc (r16 opt).
-
-    r17 opt (guide §2.5): ``spread`` round-robins the corpus before the
-    shingle transform — the documents scan is single-split (one or two
-    tasks after the near-dup union), so the O(words)-per-doc shingle
-    fold previously ran on 1-2 cores."""
-    return (
-        spread(corpus.select("doc_id", "text"))
-        .select("doc_id", F.split("text", " ").alias("w"))
-        .filter(F.size("w") >= 5)
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, size(w) - 4),"
-                    " i -> array_join(slice(w, i, 5), ' '))"
-                )
-            ).alias("sset"),
-        )
-    )
-
-
 def _ngram_candidates(sh, df_cap: int):
     """Distinct (id_a, id_b) pairs sharing >= 1 shingle whose document
     frequency is <= ``df_cap`` — the bounded-fan-out candidate generator.
@@ -748,7 +722,11 @@ def llm_ngram_jaccard(spark, sf_dir):
     # the df-cap aggregate, and both verify legs) — without a persist the
     # O(words)-per-doc shingle transform re-runs for every subtree.
     # Persisted, it is computed once per pass like neardup_lsh's sigs.
-    sh = scoped_persist(_shingle_sets(corpus))
+    # r17 opt (guide §2.5): ``spread`` round-robins the corpus before the
+    # shingle transform — the documents scan is single-split, so the
+    # O(words)-per-doc shingle fold ran on 1-2 cores.
+    words = spread(corpus).select("doc_id", F.split("text", " ").alias("w"))
+    sh = scoped_persist(_shingle_sets(words))
     cand = _ngram_candidates(sh, _NGRAM_DF_CAP)
     sa = sh.select(F.col("doc_id").alias("id_a"), F.col("sset").alias("seta"))
     sb = sh.select(F.col("doc_id").alias("id_b"), F.col("sset").alias("setb"))

@@ -28,12 +28,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from naqed_spark.queries._util import (
-    load,
-    pin,
-    r6,
-    scoped_persist,
-    session_fragment,
+from naqed_spark.queries._util import load, pin, r6, scoped_persist
+from naqed_spark.queries.llm import (
+    _BANDS_SQL,
+    _SIG_COLS_SQL,
+    _band_buckets,
+    _band_pairs,
+    _lsh_bands,
+    _minhash,
+    _shingle_sets,
 )
 from naqed_spark.registry import query
 
@@ -567,7 +570,7 @@ def llm_quality_ensemble(spark, sf_dir):
     # construction (llm.py seeds/bands) so the audit measures the real
     # pipeline, not a model of it. One signature pass + one (band,
     # bucket) groupBy + one band-level rollup — no pair materialization.
-    oracle="""
+    oracle=f"""
     WITH sh AS (
       SELECT doc_id,
              list_distinct(list_transform(
@@ -577,21 +580,8 @@ def llm_quality_ensemble(spark, sf_dir):
       FROM documents WHERE len(string_split(text, ' ')) >= 5
     ),
     sigs AS (SELECT doc_id,
-             list_min(list_transform(sset, s -> md5('s0|' || s))) AS sig0,
-             list_min(list_transform(sset, s -> md5('s1|' || s))) AS sig1,
-             list_min(list_transform(sset, s -> md5('s2|' || s))) AS sig2,
-             list_min(list_transform(sset, s -> md5('s3|' || s))) AS sig3,
-             list_min(list_transform(sset, s -> md5('s4|' || s))) AS sig4,
-             list_min(list_transform(sset, s -> md5('s5|' || s))) AS sig5,
-             list_min(list_transform(sset, s -> md5('s6|' || s))) AS sig6,
-             list_min(list_transform(sset, s -> md5('s7|' || s))) AS sig7
-             FROM sh),
-    bands AS (
-      SELECT doc_id, 0 AS band, md5(sig0 || sig1) AS bh FROM sigs
-      UNION ALL SELECT doc_id, 1, md5(sig2 || sig3) FROM sigs
-      UNION ALL SELECT doc_id, 2, md5(sig4 || sig5) FROM sigs
-      UNION ALL SELECT doc_id, 3, md5(sig6 || sig7) FROM sigs
-    ),
+             {_SIG_COLS_SQL} FROM sh),
+    bands AS ({_BANDS_SQL}),
     buckets AS (
       SELECT band, bh, count(*) AS c FROM bands GROUP BY band, bh
     )
@@ -611,13 +601,11 @@ def llm_lsh_bucket_audit(spark, sf_dir):
     # Project+Generate over ONE sigs instance (equivalence pinned by
     # test_band_buckets_match_union_spelling), and the 4×2 default band
     # table is the same per-session lazy fragment the neardup keys share.
-    from naqed_spark.queries.llm import _band_buckets, _minhash_sigs
-
-    sigs = _minhash_sigs(spark, sf_dir)
-    bands = session_fragment(
-        spark, ("band_buckets", sf_dir, 4, 2), lambda: _band_buckets(sigs)
+    buckets = (
+        _lsh_bands(spark, sf_dir)
+        .groupBy("band", "bh")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
-    buckets = bands.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("c"))
     pairs = (F.col("c") * (F.col("c") - 1) / 2).cast("bigint")
     mx = F.max("c")
     return buckets.groupBy("band").agg(
@@ -632,10 +620,45 @@ def llm_lsh_bucket_audit(spark, sf_dir):
     )
 
 
+# DuckDB twin of _planted_shingles: the CTEs base, corpus and sh
+_PLANTED_SH_SQL = """
+    base AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+    corpus AS (
+      SELECT doc_id, w FROM base
+      UNION ALL
+      SELECT doc_id + 300000,
+             list_transform(list_filter(range(1, len(w) + 1),
+                                        i -> i % 7 != 0), i -> w[i])
+      FROM base WHERE doc_id % 5 = 0
+    ),
+    sh AS (
+      SELECT doc_id,
+             list_distinct(list_transform(range(1, len(w) - 3),
+               i -> array_to_string(w[i:i+4], ' '))) AS sset
+      FROM corpus WHERE len(w) >= 5
+    )"""
+
+
+def _planted_shingles(spark, sf_dir):
+    """(doc_id, sset) of the documents plus the planted near-dups: every
+    5th doc gains a variant (doc_id + 300000) missing each 7th word."""
+    base = load(spark, sf_dir, "documents").select(
+        "doc_id", F.split("text", " ").alias("w")
+    )
+    variant = base.filter(F.col("doc_id") % 5 == 0).select(
+        (F.col("doc_id") + 300000).alias("doc_id"),
+        F.expr(
+            "transform(filter(sequence(1, size(w)), i -> i % 7 != 0),"
+            " i -> element_at(w, i))"
+        ).alias("w"),
+    )
+    return _shingle_sets(base.unionAll(variant))
+
+
 # LSH evaluation: variants drop every 7th word → planted near-dup pairs
 # with known-high Jaccard; precision verifies candidates by EXACT Jaccard
 # (computed only on candidates — sub-quadratic), recall is measured
-# against the planted set. Thresholold is fixture-scaled.
+# against the planted set. Threshold is fixture-scaled.
 _LSH_EVAL_TAU = 0.5
 
 
@@ -651,38 +674,10 @@ _LSH_EVAL_TAU = 0.5
     # MinHash construction is the registered llm.py one (same seeds and
     # banding), so the numbers audit the REAL pipeline.
     oracle=f"""
-    WITH base AS (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents),
-    corpus AS (
-      SELECT doc_id, w FROM base
-      UNION ALL
-      SELECT doc_id + 300000,
-             list_transform(list_filter(range(1, len(w) + 1),
-                                        i -> i % 7 != 0), i -> w[i])
-      FROM base WHERE doc_id % 5 = 0
-    ),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w) - 3),
-               i -> array_to_string(w[i:i+4], ' '))) AS sset
-      FROM corpus WHERE len(w) >= 5
-    ),
+    WITH {_PLANTED_SH_SQL},
     sigs AS (SELECT doc_id, sset,
-             list_min(list_transform(sset, s -> md5('s0|' || s))) AS sig0,
-             list_min(list_transform(sset, s -> md5('s1|' || s))) AS sig1,
-             list_min(list_transform(sset, s -> md5('s2|' || s))) AS sig2,
-             list_min(list_transform(sset, s -> md5('s3|' || s))) AS sig3,
-             list_min(list_transform(sset, s -> md5('s4|' || s))) AS sig4,
-             list_min(list_transform(sset, s -> md5('s5|' || s))) AS sig5,
-             list_min(list_transform(sset, s -> md5('s6|' || s))) AS sig6,
-             list_min(list_transform(sset, s -> md5('s7|' || s))) AS sig7
-             FROM sh),
-    bands AS (
-      SELECT doc_id, 0 AS band, md5(sig0 || sig1) AS bh FROM sigs
-      UNION ALL SELECT doc_id, 1, md5(sig2 || sig3) FROM sigs
-      UNION ALL SELECT doc_id, 2, md5(sig4 || sig5) FROM sigs
-      UNION ALL SELECT doc_id, 3, md5(sig6 || sig7) FROM sigs
-    ),
+             {_SIG_COLS_SQL} FROM sh),
+    bands AS ({_BANDS_SQL}),
     cand AS (
       SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
       FROM bands a JOIN bands b
@@ -715,36 +710,8 @@ _LSH_EVAL_TAU = 0.5
     """,
 )
 def llm_lsh_precision_recall(spark, sf_dir):
-    d = load(spark, sf_dir, "documents")
-    base = d.select("doc_id", F.split("text", " ").alias("w"))
-    variant = base.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 300000).alias("doc_id"),
-        F.expr(
-            "transform(filter(sequence(1, size(w)), i -> i % 7 != 0),"
-            " i -> element_at(w, i))"
-        ).alias("w"),
-    )
-    corpus = base.unionAll(variant).filter(F.size("w") >= 5)
-    sh = corpus.select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                "transform(sequence(1, size(w) - 4),"
-                " i -> array_join(slice(w, i, 5), ' '))"
-            )
-        ).alias("sset"),
-    )
-    seeds = [f"s{k}|" for k in range(8)]
-    sigs = sh.select(
-        "doc_id",
-        "sset",
-        *[
-            F.array_min(
-                F.expr(f"transform(sset, s -> md5('{seed}' || s))")
-            ).alias(f"sig{k}")
-            for k, seed in enumerate(seeds)
-        ],
-    )
+    sh = _planted_shingles(spark, sf_dir)
+    sigs = _minhash(sh)
     # r16 opt (guide §1.2/§5): this audit runs FOUR scalar count() actions
     # (planted / recalled / candidates / precise) — before, every action
     # recomputed the shingle+MinHash+band pipeline from scratch (the
@@ -752,18 +719,8 @@ def llm_lsh_precision_recall(spark, sf_dir):
     # frames every count hangs off — the shingle sets and the candidate
     # pairs — carry scoped persist marks. Band table comes from the
     # shared single-pass _band_buckets instead of a 4-way unionAll.
-    from naqed_spark.queries.llm import _band_buckets
-
     sh = scoped_persist(sh)
-    bands = _band_buckets(sigs)
-    a = bands.select(F.col("doc_id").alias("ia"), "band", "bh")
-    b_ = bands.select(F.col("doc_id").alias("ib"), "band", "bh")
-    cand = scoped_persist(
-        a.join(b_, ["band", "bh"])
-        .filter(F.col("ia") < F.col("ib"))
-        .select("ia", "ib")
-        .distinct()
-    )
+    cand = scoped_persist(_band_pairs(_band_buckets(sigs)).toDF("ia", "ib"))
     sa = sh.select(F.col("doc_id").alias("ia"), F.col("sset").alias("sa"))
     sb = sh.select(F.col("doc_id").alias("ib"), F.col("sset").alias("sb"))
     verified = (
@@ -965,32 +922,9 @@ def _banding_sql(nbands: int, rows: int) -> str:
     # construction), per config, in one signature pass. Each config is a
     # band equi-join — never all-pairs.
     oracle=f"""
-    WITH base AS (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents),
-    corpus AS (
-      SELECT doc_id, w FROM base
-      UNION ALL
-      SELECT doc_id + 300000,
-             list_transform(list_filter(range(1, len(w) + 1),
-                                        i -> i % 7 != 0), i -> w[i])
-      FROM base WHERE doc_id % 5 = 0
-    ),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w) - 3),
-               i -> array_to_string(w[i:i+4], ' '))) AS sset
-      FROM corpus WHERE len(w) >= 5
-    ),
+    WITH {_PLANTED_SH_SQL},
     psigs AS (SELECT doc_id,
-             list_min(list_transform(sset, s -> md5('s0|' || s))) AS sig0,
-             list_min(list_transform(sset, s -> md5('s1|' || s))) AS sig1,
-             list_min(list_transform(sset, s -> md5('s2|' || s))) AS sig2,
-             list_min(list_transform(sset, s -> md5('s3|' || s))) AS sig3,
-             list_min(list_transform(sset, s -> md5('s4|' || s))) AS sig4,
-             list_min(list_transform(sset, s -> md5('s5|' || s))) AS sig5,
-             list_min(list_transform(sset, s -> md5('s6|' || s))) AS sig6,
-             list_min(list_transform(sset, s -> md5('s7|' || s))) AS sig7
-             FROM sh),
+             {_SIG_COLS_SQL} FROM sh),
     planted AS (
       SELECT s1.doc_id AS ia, s2.doc_id AS ib
       FROM sh s1 JOIN sh s2 ON s2.doc_id = s1.doc_id + 300000
@@ -1027,34 +961,8 @@ def _banding_sql(nbands: int, rows: int) -> str:
     """,
 )
 def llm_lsh_banding_sweep(spark, sf_dir):
-    d = load(spark, sf_dir, "documents")
-    base = d.select("doc_id", F.split("text", " ").alias("w"))
-    variant = base.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 300000).alias("doc_id"),
-        F.expr(
-            "transform(filter(sequence(1, size(w)), i -> i % 7 != 0),"
-            " i -> element_at(w, i))"
-        ).alias("w"),
-    )
-    corpus = base.unionAll(variant).filter(F.size("w") >= 5)
-    sh = corpus.select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                "transform(sequence(1, size(w) - 4),"
-                " i -> array_join(slice(w, i, 5), ' '))"
-            )
-        ).alias("sset"),
-    )
-    sigs = pin(sh.select(  # reused by all three configs — compute once
-        "doc_id",
-        *[
-            F.array_min(
-                F.expr(f"transform(sset, s -> md5('s{k}|' || s))")
-            ).alias(f"sig{k}")
-            for k in range(8)
-        ],
-    ))
+    # reused by all three configs — compute once
+    sigs = pin(_minhash(_planted_shingles(spark, sf_dir)).drop("sset"))
     # r16 opt (guide §1.2): planted pairs derive from doc_ids alone, and
     # sigs (checkpointed above) carries exactly sh's doc_ids — deriving
     # planted from sigs instead of sh stops every planted use (1 count +
@@ -1072,19 +980,10 @@ def llm_lsh_banding_sweep(spark, sf_dir):
     def config(nbands: int, rows: int):
         # the production band construction, parameterized by banding
         # config — shared with llm_neardup_lsh so the sweep measures
-        # the real thing (r16 review)
-        from naqed_spark.queries.llm import _band_buckets
-
+        # the real thing (r16 review); two counts below — candidate set
+        # computed once
         bands = _band_buckets(sigs, nbands, rows)
-        a = bands.select(F.col("doc_id").alias("ia"), "band", "bh")
-        b_ = bands.select(F.col("doc_id").alias("ib"), "band", "bh")
-        # two counts below — candidate set computed once
-        cand = scoped_persist(
-            a.join(b_, ["band", "bh"])
-            .filter(F.col("ia") < F.col("ib"))
-            .select("ia", "ib")
-            .distinct()
-        )
+        cand = scoped_persist(_band_pairs(bands).toDF("ia", "ib"))
         n_cand = cand.count()
         n_rec = planted.join(cand, ["ia", "ib"], "left_semi").count()
         # NULL recall when nothing is planted (DuckDB x/0 → NULL parity)

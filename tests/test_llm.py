@@ -47,11 +47,71 @@ def test_band_buckets_match_union_spelling(spark):
     assert new.exceptAll(old).isEmpty() and old.exceptAll(new).isEmpty()
 
 
+def test_band_pairs_match_python(spark):
+    """_band_pairs against a Python grouping of hand-built band rows:
+    one row per pair however many buckets it shares, id_a < id_b, no
+    pair from a lone document or from equal hashes in different bands,
+    three pairs from a three-document bucket."""
+    from itertools import combinations
+
+    from naqed_spark.queries.llm import _band_pairs
+
+    rows = [
+        (2, 0, "x"), (1, 0, "x"),  # 1, 2 share two buckets
+        (2, 1, "y"), (1, 1, "y"),
+        (5, 0, "z"), (4, 0, "z"), (3, 0, "z"),  # a three-doc bucket
+        (6, 0, "solo"),  # alone in its bucket
+        (7, 2, "w"), (8, 3, "w"),  # same hash, different bands
+    ]
+    schema = "doc_id long, band int, bh string"
+    buckets = {}
+    for doc_id, band, bh in rows:
+        buckets.setdefault((band, bh), []).append(doc_id)
+    want = {
+        p for ids in buckets.values() for p in combinations(sorted(ids), 2)
+    }
+    got = _band_pairs(spark.createDataFrame(rows, schema)).collect()
+    assert sorted(map(tuple, got)) == sorted(want)
+    assert want == {(1, 2), (3, 4), (3, 5), (4, 5)}
+    assert all(r.id_a < r.id_b for r in got)
+    empty = _band_pairs(spark.createDataFrame([], schema))
+    assert empty.columns == ["id_a", "id_b"] and empty.isEmpty()
+
+
+def test_shingle_sets_match_python(spark):
+    """_shingle_sets against Python: distinct 5-word shingles in first
+    occurrence order, no row for a document under 5 words, a repeated
+    5-gram kept once."""
+    from naqed_spark.queries.llm import _shingle_sets
+
+    texts = {
+        1: "one two three four",  # 4 words: no shingles
+        2: "a b c d e",  # exactly one shingle
+        3: "a b c d e a b c d e",  # "a b c d e" occurs twice
+        4: "p q r s t u v",
+    }
+    want = {}
+    for doc_id, text in texts.items():
+        w = text.split(" ")
+        if len(w) >= 5:
+            grams = [" ".join(w[i:i + 5]) for i in range(len(w) - 4)]
+            want[doc_id] = list(dict.fromkeys(grams))
+    corpus = spark.createDataFrame(
+        list(texts.items()), "doc_id long, text string"
+    )
+    words = corpus.select("doc_id", F.split("text", " ").alias("w"))
+    got = {r.doc_id: r.sset for r in _shingle_sets(words).collect()}
+    assert got == want
+    assert 1 not in got and got[3].count("a b c d e") == 1
+    assert len(got[3]) == 5
+
+
 def test_ngram_candidates_match_join_spelling(spark):
     """The windowed-posting-list candidate generator yields exactly the
     pair set of the old keep-join + self-join spelling, including the df
     cap cutting in mid-range (cap=3 on a corpus with shingle df 1..4)."""
-    from naqed_spark.queries.llm_ext import _ngram_candidates, _shingle_sets
+    from naqed_spark.queries.llm import _shingle_sets
+    from naqed_spark.queries.llm_ext import _ngram_candidates
 
     # doc i repeats a shared 5-word opener for i groups → shingle dfs 1..4
     docs = [
@@ -59,7 +119,7 @@ def test_ngram_candidates_match_join_spelling(spark):
         for i in range(8)
     ]
     corpus = spark.createDataFrame(docs, "doc_id long, text string")
-    sh = _shingle_sets(corpus)
+    sh = _shingle_sets(corpus.select("doc_id", F.split("text", " ").alias("w")))
     for cap in (1, 3, 10**9):
         new = _ngram_candidates(sh, cap)
         ex = sh.select("doc_id", F.explode("sset").alias("s"))

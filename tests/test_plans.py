@@ -277,14 +277,17 @@ def test_ngram_df_cap_bounds_skewed_candidates(spark):
     # make the candidate join quadratic in its posting list. 100 docs all
     # opening with the same 5 words + unique tails: uncapped -> 100*99/2
     # candidate pairs from that one shingle; df-capped -> none of them.
-    from naqed_spark.queries.llm_ext import _ngram_candidates, _shingle_sets
+    from pyspark.sql import functions as F
+
+    from naqed_spark.queries.llm import _shingle_sets
+    from naqed_spark.queries.llm_ext import _ngram_candidates
 
     docs = [
         (i, "the quick brown fox jumps u%da u%db u%dc u%dd" % (i, i, i, i))
         for i in range(100)
     ]
     corpus = spark.createDataFrame(docs, "doc_id long, text string")
-    sh = _shingle_sets(corpus)
+    sh = _shingle_sets(corpus.select("doc_id", F.split("text", " ").alias("w")))
     uncapped = _ngram_candidates(sh, 10**9).count()
     capped = _ngram_candidates(sh, 64).count()
     assert uncapped >= 100 * 99 // 2
